@@ -2,7 +2,7 @@
 
 A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of ``opentargets/evidence_datasource_parsers`` (reference surveyed
-in /root/repo/SURVEY.md), extended with the operators a large-scale
+in SURVEY.md at the repository root), extended with the operators a large-scale
 training-data pipeline needs (dedup, similarity search, text analysis,
 multimodal column plumbing).
 

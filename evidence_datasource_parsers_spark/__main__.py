@@ -61,13 +61,14 @@ def main(argv: list[str] | None = None) -> int:
                          "ingested; created on first run)")
     refresh.add_argument("--store-table", default=None,
                          help="carry the fingerprint store as a BUCKETED "
-                         "catalog table under this name (exact: "
-                         "content_hash, lsh: band+key, simhash: the "
-                         "combo+key KEY-INDEX form): the per-round "
+                         "catalog table under this name, bucketed on the "
+                         "mode's probe key (exact: content_hash, lsh: "
+                         "band+key, simhash: combo+key): the per-round "
                          "probe reads the store in place instead of "
                          "re-shuffling it — the corpus-scale path; "
                          "re-registered from _bucket_spec.json in fresh "
-                         "sessions")
+                         "sessions.  Without it the same rows live in a "
+                         "plain parquet dir")
     refresh.add_argument("--canon-table", default=None,
                          help="carry the canon segment store as a "
                          "bucketed table (seg_key); needs --canon-store")
@@ -792,7 +793,14 @@ def _refresh(args) -> int:
     import os
 
     from evidence_datasource_parsers_spark.streaming.incremental import (
+        HAMMING_INDEX_IDENTITY,
+        SINK_BUCKET_COLS,
+        _check_hamming_index_meta,
+        read_store,
         recover_store_dir,
+    )
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        ClassicStoreError,
     )
     from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
         refresh_corpus_batch,
@@ -802,14 +810,9 @@ def _refresh(args) -> int:
     if args.canon_col and not args.canon_store:
         print("refresh: --canon-col needs --canon-store", file=sys.stderr)
         return 2
-    simhash_index = bool(args.store_table) and args.mode == "simhash"
     if args.canon_table and not args.canon_store:
         print("refresh: --canon-table needs --canon-store", file=sys.stderr)
         return 2
-
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
-    )
 
     spark = get_spark("refresh")
     spark.sparkContext.setLogLevel("ERROR")
@@ -818,49 +821,18 @@ def _refresh(args) -> int:
     # __old_* dir — restore it before reading
     if recover_store_dir(args.store):
         print(f"refresh: recovered {args.store} from interrupted swap")
-    if simhash_index and os.path.isdir(args.store):
-        # the KEY-INDEX store's combo split is its identity (same
-        # refuse-on-mismatch discipline as the sink); the CLI runs the
-        # operator defaults, so the sidecar must record exactly those —
-        # one shared identity table with the sink (review finding r12)
-        from evidence_datasource_parsers_spark.operators.dedupe import (
-            read_simhash_index_meta,
-        )
-        from evidence_datasource_parsers_spark.streaming.incremental import (
-            HAMMING_INDEX_IDENTITY,
-        )
-
-        ident = HAMMING_INDEX_IDENTITY["simhash"]
-        recorded = read_simhash_index_meta(args.store)
-        if recorded is None:
-            print(
-                f"refresh: simhash index store {args.store} has no "
-                "_simhash_index_meta.json sidecar — its combo split is "
-                "unknown. A fresh KEY-INDEX store just needs the stamp "
-                "(write_simhash_index_meta with the true split); a "
-                "CLASSIC fingerprint store from pre-table rounds must "
-                "be MIGRATED first: explode it with simhash_key_index, "
-                "write with sinks.write_bucketed_store(['combo', "
-                "'key'], n), then stamp — classic rows have no "
-                "combo/key columns and cannot be probed by the index "
-                "path.",
-                file=sys.stderr,
-            )
-            return 2
-        if recorded != ident:
-            print(
-                f"refresh: simhash index store {args.store} records "
-                f"{recorded}, this CLI probes at {ident} — the packed "
-                "keys are not comparable",
-                file=sys.stderr,
-            )
-            return 2
     # bucketed-table-first when --store-table is set (the probe join then
     # reads the store in place); plain parquet otherwise.  read_store's
     # refusals (sidecar-less dir under --store-table, stale/shadowed
     # binding) follow the CLI contract — message to stderr, exit 2 — like
-    # _compact's, never a raw traceback
+    # _compact's, never a raw traceback.  A simhash store's combo split is
+    # its identity: the CLI probes at the operator defaults, so the
+    # sidecar must record exactly those (a classic store has none)
     try:
+        if args.mode == "simhash":
+            _check_hamming_index_meta(
+                args.store, HAMMING_INDEX_IDENTITY["simhash"]
+            )
         prev = read_store(spark, args.store, args.store_table)
     except ValueError as exc:
         print(f"refresh: {exc}", file=sys.stderr)
@@ -907,26 +879,32 @@ def _refresh(args) -> int:
             except ValueError as exc:
                 print(f"refresh: {exc}", file=sys.stderr)
                 return 2
-    res = refresh_corpus_batch(
-        batch,
-        prev,
-        args.text_col,
-        args.id_col,
-        mode=args.mode,
-        simhash_index=simhash_index,
-        min_quality=args.min_quality,
-        num_shards=args.shards,
-        canonicalize=args.canonicalize,
-        canon_col=args.canon_col,
-        canon_store=prev_canon,
-        canon_max_dist=args.canon_max_dist,
-        eval_set=(
-            spark.read.parquet(args.eval_set) if args.eval_set else None
-        ),
-        eval_text_col=args.eval_text_col,
-        decontam_n=args.decontam_n,
-        decontam_min_overlap=args.decontam_min_overlap,
-    )
+    try:
+        res = refresh_corpus_batch(
+            batch,
+            prev,
+            args.text_col,
+            args.id_col,
+            mode=args.mode,
+            min_quality=args.min_quality,
+            num_shards=args.shards,
+            canonicalize=args.canonicalize,
+            canon_col=args.canon_col,
+            canon_store=prev_canon,
+            canon_max_dist=args.canon_max_dist,
+            eval_set=(
+                spark.read.parquet(args.eval_set) if args.eval_set else None
+            ),
+            eval_text_col=args.eval_text_col,
+            decontam_n=args.decontam_n,
+            decontam_min_overlap=args.decontam_min_overlap,
+        )
+    except ClassicStoreError as exc:
+        # a store whose sidecar passed but whose files are not the index
+        # form (an interrupted hand migration, a flat canon store with a
+        # stamped k) is refused by the operators' column check
+        print(f"refresh: {exc}", file=sys.stderr)
+        return 2
     try:
         # checkpoint BEFORE the store append: committing a write to
         # args.store refreshes that path and invalidates dependent plans,
@@ -986,31 +964,23 @@ def _refresh(args) -> int:
                 )
                 append_bucketed_store(delta, table, acols, abuckets)
 
-        from evidence_datasource_parsers_spark.streaming.incremental import (
-            SINK_BUCKET_COLS,
-        )
-
         def stamp_fp_store(d):
             from evidence_datasource_parsers_spark.operators.dedupe import (
                 write_simhash_index_meta,
             )
-            from evidence_datasource_parsers_spark.streaming.incremental import (  # noqa: E501
-                HAMMING_INDEX_IDENTITY,
-            )
 
-            ident = HAMMING_INDEX_IDENTITY["simhash"]
-            write_simhash_index_meta(
-                d, ident["nbits"], ident["max_hamming"], ident["n_blocks"]
-            )
+            write_simhash_index_meta(d, **HAMMING_INDEX_IDENTITY["simhash"])
 
+        simhash = args.mode == "simhash"
         advance(
             res.store_delta, args.store, args.store_table, prev,
             SINK_BUCKET_COLS.get(args.mode, ["content_hash"]),
-            stamp=stamp_fp_store if simhash_index else None,
+            stamp=stamp_fp_store if simhash else None,
         )
-        if simhash_index:
-            # idempotent re-stamp (equal values): covers later rounds'
-            # appends; the first-round create already stamped atomically
+        if simhash:
+            # idempotent re-stamp (equal values): covers plain-dir rounds
+            # and later appends; a first-round table create already
+            # stamped atomically
             stamp_fp_store(args.store)
         if canon_delta is not None:
             from evidence_datasource_parsers_spark.operators.fuzzy_join import (  # noqa: E501
@@ -1067,10 +1037,17 @@ def _refresh(args) -> int:
 def _refresh_media(args) -> int:
     """The media branch of the crawl loop as an operation — identical
     append-only store discipline to the text ``refresh``, over the
-    perceptual pHash store."""
+    perceptual pHash key-index store (its combo split, with this run's
+    ``--max-hamming``, is validated against and stamped into the
+    ``_simhash_index_meta.json`` sidecar)."""
     import os
 
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        write_simhash_index_meta,
+    )
     from evidence_datasource_parsers_spark.streaming.incremental import (
+        _check_hamming_index_meta,
+        _index_identity,
         recover_store_dir,
     )
     from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
@@ -1083,6 +1060,12 @@ def _refresh_media(args) -> int:
     batch = spark.read.parquet(args.batch)
     if recover_store_dir(args.store):
         print(f"refresh-media: recovered {args.store} from interrupted swap")
+    ident = _index_identity("phash", {"max_hamming": args.max_hamming})
+    try:
+        _check_hamming_index_meta(args.store, ident)
+    except ValueError as exc:
+        print(f"refresh-media: {exc}", file=sys.stderr)
+        return 2
     prev = (
         spark.read.parquet(args.store)
         if os.path.isdir(args.store)
@@ -1101,6 +1084,7 @@ def _refresh_media(args) -> int:
         # same checkpoint-before-append discipline as `refresh`
         ready = res.ready.localCheckpoint(eager=True)
         res.store_delta.write.mode("append").parquet(args.store)
+        write_simhash_index_meta(args.store, **ident)
         ready.write.mode("append").parquet(args.out)
         n = ready.count()
         print(

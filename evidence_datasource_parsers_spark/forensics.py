@@ -28,7 +28,12 @@ import json
 import math
 import os
 
-ARTIFACT_DIR = os.environ.get("SPARK_GRAFT_FORENSICS_DIR", "/root/repo")
+#: where audit artifacts land: $SPARK_GRAFT_FORENSICS_DIR, else the root
+#: of the checkout this package was imported from
+ARTIFACT_DIR = os.environ.get(
+    "SPARK_GRAFT_FORENSICS_DIR",
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+)
 
 #: the driver's correctness gate runs at this scale; audit ARTIFACTS are
 #: persisted only for gate-scale runs so an sf0.001 smoke/pytest pass can

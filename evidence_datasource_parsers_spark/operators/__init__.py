@@ -19,7 +19,7 @@ from evidence_datasource_parsers_spark.operators.dedupe import (  # noqa: F401
     exact_dedupe,
     incremental_exact_dedupe,
     incremental_lsh_dedupe,
-    incremental_simhash_dedupe,
+    incremental_simhash_dedupe_indexed,
     lsh_candidate_pairs,
     lsh_fingerprints,
     simhash_fingerprints,
@@ -146,7 +146,6 @@ from evidence_datasource_parsers_spark.operators.fuzzy_join import (  # noqa: F4
     compact_canon_store,
     edit_distance_join,
     edit_distance_self_join,
-    incremental_canonicalize,
     incremental_canonicalize_indexed,
 )
 from evidence_datasource_parsers_spark.operators.layout_audit import (  # noqa: F401

@@ -1044,10 +1044,13 @@ def simhash_combo_keys(
 
 
 class IncrementalSimhashResult(NamedTuple):
-    """Result of :func:`incremental_simhash_dedupe` — same contract as
-    :class:`IncrementalLshResult`: ``pinned`` is the persisted fingerprint
-    frame both outputs derive from; unpersist it after materializing;
-    ``delta`` is the batch's store contribution to APPEND on disk."""
+    """Result of the hamming key-index operators
+    (:func:`incremental_simhash_dedupe_indexed` and the perceptual ones
+    in ``multimodal``, whose video frame store returns it too):
+    ``pinned`` is the persisted fingerprint frame both outputs derive
+    from; unpersist it after materializing; ``delta`` is the batch's
+    store rows alone, disjoint from the carried store — APPEND it on disk
+    in O(batch); ``store`` is the in-plan union view."""
 
     fresh: DataFrame
     store: DataFrame
@@ -1062,9 +1065,8 @@ def simhash_fingerprints(
     nbits: int = 32,
 ) -> DataFrame:
     """Per-document SimHash fingerprint rows ``(id, content_hash, simhash)``
-    — ONE row per document (vs ``bands`` rows for the MinHash store): the
-    combo keys are rederived from the fingerprint by shift/mask at join
-    time, so the persisted state is 16 bytes of hashes per document.
+    — ONE row per document; :func:`hamming_key_index` explodes them into
+    the persisted key-index form.
 
     Two-stage like :func:`with_simhash`: the token-hash array materializes
     once, then the nbits majority-vote legs read the materialized column —
@@ -1095,12 +1097,10 @@ def _simhash_batch_survivors(
     nbits: int,
     batch_fingerprints: DataFrame | None,
 ):
-    """Shared within-batch preamble of the classic AND key-index simhash
-    operators — ONE implementation so the equivalence the indexed twin
-    promises can never drift: exact dups collapse to the min-id
-    representative, and the retained docs' fingerprints are persisted.
-    Returns ``(survivors, fp)`` with ``fp`` pinned (caller contract:
-    ``pinned.unpersist()`` after materialization)."""
+    """Within-batch preamble of the simhash operator: exact dups collapse
+    to the min-id representative, and the retained docs' fingerprints
+    are persisted.  Returns ``(survivors, fp)`` with ``fp`` pinned
+    (caller contract: ``pinned.unpersist()`` after materialization)."""
     if batch_fingerprints is None:
         hashed = new_batch.withColumn(
             "__ch", F.coalesce(content_hash(F.col(text_col)), F.lit(-1))
@@ -1126,91 +1126,7 @@ def _simhash_batch_survivors(
     return survivors, fp
 
 
-def incremental_simhash_dedupe(
-    new_batch: DataFrame,
-    fingerprint_store: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    *,
-    nbits: int = 32,
-    max_hamming: int = 3,
-    n_blocks: int = 6,
-    batch_fingerprints: DataFrame | None = None,
-) -> IncrementalSimhashResult:
-    """Batch-over-batch near-dup dedup against a persisted SimHash store
-    (:func:`simhash_fingerprints` rows; None on the first run).  A new
-    document is dropped when a stored fingerprint lies within hamming
-    distance ``max_hamming`` of its own ``nbits``-bit SimHash — candidates
-    generated by the Manku-Jain-Das-Sarma block-combination tables (module
-    comment above), then verified with ``bit_count(xor)``.  Exact copies
-    need no separate hash leg: identical text fingerprints identically, so
-    they are combo-key mates at hamming 0.  (The ``content_hash`` column in
-    the store exists for interop with the exact-dedup store format and for
-    audit joins, not for the drop rule.)
-
-    Net semantics (what the oracle replays): dropped iff exact-hash match
-    OR min hamming to the store <= max_hamming — the pigeonhole guarantees
-    the candidate step loses nothing, and verification kills every
-    block-collision false positive.
-
-    Within-batch exact dups collapse to the min-id representative first
-    (same rule as the other incremental operators); within-batch NEAR dups
-    are left to an at-rest pass over the (small) batch.
-
-    Scale shape: the batch text is scanned once; both sides explode into
-    C(n_blocks, max_hamming) rows keyed on (combo, packed-block-bits) —
-    with 64-bit fingerprints / d=3 / 6 blocks that is 20 rows per doc
-    joined on ~32-bit keys, so bucket occupancy stays ~|corpus| / 2^32 per
-    table and the verify step touches only bucket-mates.  The store is one
-    16-byte row per document; write it with ``sinks.write_bucketed_store``
-    (bucketed by ``content_hash``) so the exact leg is co-located.
-
-    Returns ``(fresh, store, pinned)`` as :class:`IncrementalSimhashResult`.
-
-    ``batch_fingerprints``: optional precomputed :func:`simhash_fingerprints`
-    rows for ``new_batch`` (single-scan reuse; same contract as
-    ``incremental_lsh_dedupe``'s parameter — ``nbits`` must match).
-    """
-    survivors, fp = _simhash_batch_survivors(
-        new_batch, text_col, id_col, nbits, batch_fingerprints
-    )
-    if fingerprint_store is None:
-        return IncrementalSimhashResult(
-            fresh=survivors, store=fp, pinned=fp, delta=fp
-        )
-    # Pigeonhole candidate tables: explode both sides on (combo, key).  NO
-    # separate exact-hash leg: identical text gives identical fingerprints,
-    # so an exact dup is a combo-key mate at hamming 0 — strictly inside
-    # the hamming <= max_hamming rule (including degenerate text, which
-    # fingerprints to simhash 0 on both sides).
-    combo_sql = simhash_combo_keys_sql("simhash", nbits, max_hamming, n_blocks)
-    batch_keys = fp.selectExpr(
-        f"`{id_col}`",
-        "simhash AS __nsim",
-        f"explode({combo_sql}) AS __k",
-    ).select(id_col, "__nsim", "__k.combo", "__k.key")
-    store_keys = fingerprint_store.selectExpr(
-        "simhash AS __ssim",
-        f"explode({combo_sql}) AS __k",
-    ).select("__ssim", "__k.combo", "__k.key")
-    # duplicate ids on the anti-join's right are harmless — no distinct
-    dropped = (
-        batch_keys.join(store_keys, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__nsim"), F.col("__ssim"))
-            <= F.lit(max_hamming)
-        )
-        .select(id_col)
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    delta = fp.join(dropped, on=id_col, how="left_anti")
-    new_store = fingerprint_store.unionByName(delta)
-    return IncrementalSimhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
-    )
-
-
-#: sidecar recording the combo-split identity of a simhash KEY-INDEX
+#: sidecar recording the combo-split identity of a hamming KEY-INDEX
 #: store (below).  (nbits, max_hamming, n_blocks) determine which block
 #: subsets the stored keys pack, so probing a store built under a
 #: different split silently MISSES near-dups — the same
@@ -1221,7 +1137,7 @@ SIMHASH_INDEX_META_FILE = "_simhash_index_meta.json"
 def write_simhash_index_meta(
     store_dir: str, nbits: int, max_hamming: int, n_blocks: int
 ) -> None:
-    """Stamp the combo-split identity beside a simhash key-index store."""
+    """Stamp the combo-split identity beside a hamming key-index store."""
     import json
     import os
 
@@ -1249,22 +1165,84 @@ def read_simhash_index_meta(store_dir: str) -> dict | None:
         return json.load(f)
 
 
-def simhash_key_index(
-    fp: DataFrame, id_col: str, nbits: int, max_hamming: int, n_blocks: int
+def hamming_key_index(
+    fp: DataFrame,
+    id_col: str,
+    fp_col: str,
+    nbits: int,
+    max_hamming: int,
+    n_blocks: int,
 ) -> DataFrame:
-    """Explode :func:`simhash_fingerprints` rows into the persisted
-    KEY-INDEX form ``(combo int, key long, simhash long, id)`` — one row
+    """Explode ``(id, <fp_col>)`` fingerprint rows into the hamming
+    KEY-INDEX form ``(combo int, key long, <fp_col> long, id)`` — one row
     per (doc, block-combination), C(n_blocks, n_blocks - max_hamming)
-    rows per document.  The one-shot builder for migrating a classic
-    fingerprint store into :func:`incremental_simhash_dedupe_indexed`'s
-    layout (write it with ``sinks.write_bucketed_store(...,
-    ["combo", "key"], n)`` and stamp :func:`write_simhash_index_meta`)."""
+    rows per document.  This is the persisted store of every hamming
+    operator (simhash, image pHash, audio fingerprint, remux stream
+    hash): the block-combination keys are paid for once, when a batch
+    joins the store, and every later probe equi-joins the stored
+    ``(combo, key)`` columns — a ``(combo, key)``-bucketed table is read
+    in place (REPOSE, ICDE 2021: build the partition-local index once,
+    reuse it on every probe)."""
+    combos = simhash_combo_keys_sql(fp_col, nbits, max_hamming, n_blocks)
     return fp.selectExpr(
-        f"`{id_col}`",
-        "simhash",
-        f"explode({simhash_combo_keys_sql('simhash', nbits, max_hamming, n_blocks)})"
-        " AS __k",
-    ).select("__k.combo", "__k.key", "simhash", id_col)
+        f"`{id_col}`", f"`{fp_col}`", f"explode({combos}) AS __k"
+    ).select("__k.combo", "__k.key", fp_col, id_col)
+
+
+def _hamming_index_probe(
+    survivors: DataFrame,
+    fp: DataFrame,
+    key_store: DataFrame | None,
+    id_col: str,
+    fp_col: str,
+    nbits: int,
+    max_hamming: int,
+    n_blocks: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The key-index probe every hamming operator shares, after its own
+    within-batch preamble produced ``survivors`` (the batch rows kept so
+    far) and ``fp`` (their ``(id, <fp_col>)`` fingerprints).  Returns
+    ``(fresh, store, delta)``.
+
+    The batch's fingerprints explode into key-index rows, equi-join the
+    STORED ``(combo, key)`` columns, and each candidate is verified with
+    one ``bit_count(xor)``: a survivor drops iff its min hamming distance
+    to the store is <= ``max_hamming`` (the pigeonhole guarantees the
+    candidate step loses nothing; exact copies are hamming-0 combo
+    mates).  ``delta`` is the kept docs' key-index rows, taken from the
+    same exploded frame — append it to advance the store."""
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        _require_columns,
+    )
+
+    batch_keys = hamming_key_index(
+        fp, id_col, fp_col, nbits, max_hamming, n_blocks
+    )
+    if key_store is None:
+        return survivors, batch_keys, batch_keys
+    _require_columns(
+        key_store, ["combo", "key", fp_col, id_col],
+        "hamming key-index store",
+        "A classic one-row-per-document fingerprint store must be "
+        "migrated once with streaming.incremental.migrate_hamming_store.",
+    )
+    store_side = key_store.select(
+        "combo", "key", F.col(fp_col).alias("__sfp")
+    )
+    dropped = (
+        batch_keys.join(store_side, on=["combo", "key"])
+        .filter(
+            hamming_distance(F.col(fp_col), F.col("__sfp"))
+            <= F.lit(max_hamming)
+        )
+        .select(id_col)
+    )
+    fresh = survivors.join(dropped, on=id_col, how="left_anti")
+    delta = batch_keys.join(dropped, on=id_col, how="left_anti")
+    store = key_store.select("combo", "key", fp_col, id_col).unionByName(
+        delta
+    )
+    return fresh, store, delta
 
 
 def incremental_simhash_dedupe_indexed(
@@ -1278,71 +1256,44 @@ def incremental_simhash_dedupe_indexed(
     n_blocks: int = 6,
     batch_fingerprints: DataFrame | None = None,
 ) -> IncrementalSimhashResult:
-    """:func:`incremental_simhash_dedupe` against a PRE-EXPLODED key-index
-    store — the hamming modality joining the bucketed-store lifecycle the
-    canon segment index pioneered (round 11) and the streaming sink's
-    ``store_table`` rides (round 12).
+    """Batch-over-batch near-dup dedup against a SimHash KEY-INDEX store
+    (:func:`hamming_key_index` rows ``(combo, key, simhash, id)``; None
+    on the first run).  A new document is dropped when a stored
+    fingerprint lies within hamming distance ``max_hamming`` of its own
+    ``nbits``-bit SimHash — candidates from the Manku-Jain-Das-Sarma
+    block-combination tables (module comment above), verified with
+    ``bit_count(xor)``.  Exact copies need no separate hash leg:
+    identical text fingerprints identically, so they are combo-key mates
+    at hamming 0.
 
-    The classic operator re-derives the store side's block-combination
-    keys from the 16-byte fingerprints EVERY batch: O(store ×
-    C(n_blocks, d)) rows generated per probe — at 10⁹ stored docs and
-    the default 6-choose-3 split that is 2·10¹⁰ exploded rows of pure
-    re-computation per micro-batch, dwarfing the join itself.  Here the
-    explosion is paid ONCE, at store-advance time: the persisted state is
-    ``(combo, key, simhash, id)`` — C(n_blocks, n_blocks - d) rows per
-    document (20× the classic store's row count, still ~0.3% of a
-    multi-KB corpus) — and the per-batch probe is a direct equi-join on
-    STORED columns, so the store carried as a bucketed table on
-    ``(combo, key)`` is read in place with zero store-side Exchange
-    (plan-asserted in tests/test_plan_shapes.py).
+    Within-batch exact dups collapse to the min-id representative first;
+    within-batch NEAR dups are left to an at-rest pass over the (small)
+    batch.
 
-    Drop rule, within-batch collapse, and return contract are IDENTICAL
-    to the classic operator (equivalence-tested batch-for-batch):
-    dropped iff min hamming to the store <= max_hamming, exact dups
-    being hamming-0 combo mates.  ``delta`` is the batch's exploded
-    index rows — append it to advance (O(batch · combos) I/O);
-    (nbits, max_hamming, n_blocks) are store identity, recorded in the
-    ``_simhash_index_meta.json`` sidecar by the consumers (the sink
-    validates-or-stamps it like the canon k).
+    Scale shape: the batch text is scanned once and explodes into
+    C(n_blocks, max_hamming) rows keyed on (combo, packed-block-bits);
+    the store side is read as stored, so a store carried as a table
+    bucketed on ``(combo, key)`` joins with zero store-side Exchange and
+    zero store-side Generate (plan-asserted in tests/test_plan_shapes.py).
+    ``delta`` is the batch's key-index rows — append it to advance
+    (O(batch · combos) I/O).  (nbits, max_hamming, n_blocks) are store
+    identity, recorded in the ``_simhash_index_meta.json`` sidecar by the
+    consumers (the sink and the CLI validate-or-stamp it).  A classic
+    one-row-per-document store raises ``store_meta.ClassicStoreError``.
+
+    ``batch_fingerprints``: optional precomputed
+    :func:`simhash_fingerprints` rows for ``new_batch`` (single-scan
+    reuse; ``nbits`` must match).
     """
     survivors, fp = _simhash_batch_survivors(
         new_batch, text_col, id_col, nbits, batch_fingerprints
     )
-    if key_store is None:
-        delta = simhash_key_index(fp, id_col, nbits, max_hamming, n_blocks)
-        return IncrementalSimhashResult(
-            fresh=survivors, store=delta, pinned=fp, delta=delta
-        )
-    batch_keys = fp.selectExpr(
-        f"`{id_col}`",
-        "simhash AS __nsim",
-        f"explode({simhash_combo_keys_sql('simhash', nbits, max_hamming, n_blocks)})"
-        " AS __k",
-    ).select(id_col, "__nsim", "__k.combo", "__k.key")
-    # the probe joins STORED columns — no per-batch store-side explode,
-    # and a (combo, key)-bucketed table is read in place
-    store_side = key_store.select(
-        "combo", "key", F.col("simhash").alias("__ssim")
+    fresh, store, delta = _hamming_index_probe(
+        survivors, fp, key_store, id_col,
+        "simhash", nbits, max_hamming, n_blocks,
     )
-    dropped = (
-        batch_keys.join(store_side, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__nsim"), F.col("__ssim"))
-            <= F.lit(max_hamming)
-        )
-        .select(id_col)
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    # the batch's exploded rows already exist in batch_keys — derive the
-    # delta from them instead of paying a second Generate over fp
-    delta = batch_keys.join(dropped, on=id_col, how="left_anti").select(
-        "combo", "key", F.col("__nsim").alias("simhash"), id_col
-    )
-    new_store = key_store.select(
-        "combo", "key", "simhash", id_col
-    ).unionByName(delta)
     return IncrementalSimhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
+        fresh=fresh, store=store, pinned=fp, delta=delta
     )
 
 

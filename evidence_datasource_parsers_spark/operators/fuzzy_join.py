@@ -53,12 +53,10 @@ from pyspark.sql import functions as F
 __all__ = [
     "CANON_META_FILE",
     "IncrementalCanonIndexedResult",
-    "IncrementalCanonResult",
     "incremental_canonicalize_indexed",
     "canon_segment_rows",
     "canon_store_hits",
     "compact_canon_store",
-    "incremental_canonicalize",
     "canonicalize_labels",
     "edit_distance_self_join",
     "edit_distance_join",
@@ -336,99 +334,25 @@ def edit_distance_self_join(
     )
 
 
-class IncrementalCanonResult(NamedTuple):
-    """Result of :func:`incremental_canonicalize`.
-
-    ``mapping`` — every new-batch row with ``canonical_id``/``canonical``
-    (stored representative when one is within ``max_dist``, else a
-    representative elected within the batch).  ``store`` — the carried
-    representative table ∪ this batch's NEW representatives.  ``delta`` —
-    only the new representatives: advance the on-disk store by APPENDING
-    it (the engine-wide append-only store discipline; O(batch) per round,
-    never an O(store) rewrite)."""
-
-    mapping: DataFrame
-    store: DataFrame
-    delta: DataFrame
-
-
-def incremental_canonicalize(
-    new_batch: DataFrame,
-    canon_store: DataFrame | None,
-    string_col: str,
-    id_col: str,
-    max_dist: int = 2,
-    hot_bucket_cap: int | None = None,
-) -> IncrementalCanonResult:
-    """Batch-over-batch metadata canonicalization against a carried
-    representative store — the fuzzy-family member of the engine's
-    incremental dedup pattern (exact / LSH / SimHash / embedding / span
-    all carry stores; canonical labels now do too).
-
-    Store schema: ``(canonical_id, canonical)`` — one row per elected
-    representative string, ids unique across rounds by contract (the
-    same contract every other store has).  ``None`` on the first run.
-
-    Semantics, in priority order:
-
-    1. a new string within ``max_dist`` of ANY stored representative maps
-       to the BEST one (min distance, then min canonical_id — fully
-       deterministic), so re-crawled and near-re-crawled metadata
-       converges on the canon elected in earlier rounds;
-    2. the remainder self-canonicalizes via :func:`canonicalize_labels`
-       (transitive closure within the batch) and its representatives
-       join the store.
-
-    Store-priority is the same deliberate asymmetry the other
-    incremental operators have: a pair of NEW strings that straddles a
-    stored rep's neighborhood can split (one maps to the store, the
-    other elects a new rep) where an at-rest pass over everything would
-    merge them — the cost of never re-scanning history.  Run the at-rest
-    :func:`canonicalize_labels` over the full corpus at compaction
-    cadence if that drift matters.
-
-    Scale note: this flat form re-derives and re-shuffles k+1 segment
-    rows per STORED representative every batch.  For production rounds
-    persist the segment index instead and use
-    :func:`incremental_canonicalize_indexed` — identical mapping
-    semantics, zero store-side Exchange per batch.
-    """
-    seg = (
-        None
-        if canon_store is None
-        else canon_segment_rows(canon_store, max_dist, hot_bucket_cap)
-    )
-    mapping, new_reps = _canon_mapping(
-        new_batch, seg, string_col, id_col, max_dist, hot_bucket_cap
-    )
-    if canon_store is None:
-        return IncrementalCanonResult(mapping, new_reps, new_reps)
-    return IncrementalCanonResult(
-        mapping, canon_store.unionByName(new_reps), new_reps
-    )
-
-
 # ---------------------------------------------------------------------------
-# Bucketed canon store — the fuzzy family's at-scale carried state.
+# Incremental canonicalization — the fuzzy-family member of the engine's
+# incremental dedup pattern (exact / LSH / SimHash / embedding / span all
+# carry stores; canonical labels do too).
 #
-# The flat (canonical_id, canonical) store above re-derives k+1 segment
-# rows per stored representative EVERY batch and shuffles them into the
-# probe join — O(store) work per round, the one store in the engine that
-# paid it.  The persisted form below is the SEGMENT INDEX itself:
+# The carried store is the SEGMENT INDEX of the elected representatives:
 #
 #     (seg_key bigint, canonical_id, canonical)
 #
 # with ``seg_key = xxhash64(length, segment_no, segment_text)``, written
-# once via ``sinks.write_bucketed_store(..., ["seg_key"], n)`` and
-# ADVANCED by appending each batch's delta
-# (``sinks.append_bucketed_store``).  The per-batch probe then shuffles
-# ONLY batch-derived rows (≤29 per string at k=2) into the store's bucket
-# layout — the store side rides no Exchange (plan-asserted in
-# tests/test_plan_shapes.py), the same zero-Exchange contract as the
-# exact/LSH fingerprint stores.  Hash collisions on seg_key only ADD
-# candidates; the exact ``levenshtein <= k`` verify kills them, and the
-# PassJoin pigeonhole guarantees every true match also arrives through a
-# genuine segment key — so the hash join is exact.
+# once via ``sinks.write_bucketed_store(..., ["seg_key"], n)`` (or as a
+# plain parquet dir) and ADVANCED by appending each batch's delta.  The
+# per-batch probe shuffles ONLY batch-derived rows (≤29 per string at
+# k=2) into the store's bucket layout — the store side rides no Exchange
+# (plan-asserted in tests/test_plan_shapes.py), the same zero-Exchange
+# contract as the exact/LSH fingerprint stores.  Hash collisions on
+# seg_key only ADD candidates; the exact ``levenshtein <= k`` verify
+# kills them, and the PassJoin pigeonhole guarantees every true match
+# also arrives through a genuine segment key — so the hash join is exact.
 # ---------------------------------------------------------------------------
 
 CANON_META_FILE = "_canon_store_meta.json"
@@ -555,22 +479,75 @@ def canon_store_hits(
     )
 
 
-def _canon_mapping(
+class IncrementalCanonIndexedResult(NamedTuple):
+    """Result of :func:`incremental_canonicalize_indexed`.
+
+    ``mapping`` — every new-batch row with ``canonical_id``/``canonical``
+    (stored representative when one is within ``max_dist``, else a
+    representative elected within the batch).  All store frames are
+    SEGMENT rows ``(seg_key, canonical_id, canonical)``: ``delta`` holds
+    only the new representatives' segments — advance the on-disk store
+    by APPENDING it (O(batch) I/O per round); ``store`` is the in-plan
+    union view for callers that chain rounds in memory."""
+
+    mapping: DataFrame
+    store: DataFrame
+    delta: DataFrame
+
+
+def incremental_canonicalize_indexed(
     new_batch: DataFrame,
     segment_store: DataFrame | None,
     string_col: str,
     id_col: str,
-    max_dist: int,
-    hot_bucket_cap: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared mapping core for both store forms: returns ``(mapping,
-    new_reps)`` where ``new_reps`` is the flat ``(canonical_id,
-    canonical)`` table of representatives elected IN THIS BATCH."""
+    max_dist: int = 2,
+    hot_bucket_cap: int | None = None,
+) -> IncrementalCanonIndexedResult:
+    """Batch-over-batch metadata canonicalization against the carried
+    segment-index store (:func:`canon_segment_rows` rows from prior
+    rounds; None on the first run).  Read it with
+    ``sinks.read_bucketed_store`` so the bucket layout survives — a plain
+    parquet read works but re-shuffles the store into the probe join.
+    Per batch, the store side of the candidate join rides zero Exchange;
+    every shuffled row is batch-derived.  A flat ``(canonical_id,
+    canonical)`` store raises ``store_meta.ClassicStoreError``: migrate
+    it once with :func:`canon_segment_rows`.
+
+    Semantics, in priority order:
+
+    1. a new string within ``max_dist`` of ANY stored representative maps
+       to the BEST one (min distance, then min canonical_id — fully
+       deterministic), so re-crawled and near-re-crawled metadata
+       converges on the canon elected in earlier rounds;
+    2. the remainder self-canonicalizes via :func:`canonicalize_labels`
+       (transitive closure within the batch) and its representatives
+       join the store.
+
+    Store-priority is the same deliberate asymmetry the other
+    incremental operators have: a pair of NEW strings that straddles a
+    stored rep's neighborhood can split (one maps to the store, the
+    other elects a new rep) where an at-rest pass over everything would
+    merge them — the cost of never re-scanning history.  Run the at-rest
+    :func:`canonicalize_labels` over the full corpus at compaction
+    cadence if that drift matters.
+    """
     if segment_store is None:
         mapping = canonicalize_labels(
             new_batch, string_col, id_col, max_dist, hot_bucket_cap
         ).select(*new_batch.columns, "canonical_id", "canonical")
-        return mapping, mapping.select("canonical_id", "canonical").distinct()
+        new_reps = mapping.select("canonical_id", "canonical").distinct()
+        delta = canon_segment_rows(new_reps, max_dist, hot_bucket_cap)
+        return IncrementalCanonIndexedResult(mapping, delta, delta)
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        _require_columns,
+    )
+
+    _require_columns(
+        segment_store, ["seg_key", "canonical_id", "canonical"],
+        "canon segment-index store",
+        "A flat (canonical_id, canonical) store must be migrated once: "
+        "write canon_segment_rows(store, max_dist) in its place.",
+    )
     hits = canon_store_hits(
         segment_store, new_batch, string_col, id_col, max_dist
     )
@@ -613,53 +590,12 @@ def _canon_mapping(
     fresh = canonicalize_labels(
         rest, string_col, id_col, max_dist, hot_bucket_cap
     ).select(*new_batch.columns, "canonical_id", "canonical")
-    return (
-        matched.unionByName(fresh),
+    delta = canon_segment_rows(
         fresh.select("canonical_id", "canonical").distinct(),
+        max_dist, hot_bucket_cap,
     )
-
-
-class IncrementalCanonIndexedResult(NamedTuple):
-    """Result of :func:`incremental_canonicalize_indexed`.  All store
-    frames are SEGMENT rows ``(seg_key, canonical_id, canonical)``.
-    ``delta`` holds only the new representatives' segments — advance the
-    on-disk store by APPENDING it (O(batch) I/O per round); ``store`` is
-    the in-plan union view for callers that chain rounds in memory."""
-
-    mapping: DataFrame
-    store: DataFrame
-    delta: DataFrame
-
-
-def incremental_canonicalize_indexed(
-    new_batch: DataFrame,
-    segment_store: DataFrame | None,
-    string_col: str,
-    id_col: str,
-    max_dist: int = 2,
-    hot_bucket_cap: int | None = None,
-) -> IncrementalCanonIndexedResult:
-    """:func:`incremental_canonicalize` against the PERSISTED segment
-    index instead of the flat representative table — the at-scale form.
-
-    ``segment_store`` is :func:`canon_segment_rows` output carried from
-    prior rounds (read it with ``sinks.read_bucketed_store`` so the
-    bucket layout survives — a plain parquet read works but re-shuffles
-    the store into the probe join).  Mapping semantics are IDENTICAL to
-    the flat variant (store-priority, then within-batch transitive
-    closure); only the store representation changes.  Per batch, the
-    store side of the candidate join rides zero Exchange; every shuffled
-    row is batch-derived.
-    """
-    mapping, new_reps = _canon_mapping(
-        new_batch, segment_store, string_col, id_col, max_dist,
-        hot_bucket_cap,
-    )
-    delta = canon_segment_rows(new_reps, max_dist, hot_bucket_cap)
-    if segment_store is None:
-        return IncrementalCanonIndexedResult(mapping, delta, delta)
     return IncrementalCanonIndexedResult(
-        mapping, segment_store.unionByName(delta), delta
+        matched.unionByName(fresh), segment_store.unionByName(delta), delta
     )
 
 

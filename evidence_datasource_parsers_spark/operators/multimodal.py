@@ -23,11 +23,15 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Callable, Iterator
-from typing import NamedTuple, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from evidence_datasource_parsers_spark.operators.dedupe import (
+    IncrementalSimhashResult,
+)
 
 #: Pluggable decoder tried before the stdlib ones: ``(bytes) -> dict | None``
 #: in :func:`decode_blob`'s return contract; None defers to stdlib.  Must be
@@ -1122,70 +1126,12 @@ def image_near_dup_pairs(
     )
 
 
-class IncrementalPhashResult(NamedTuple):
-    """Same contract as the text-side incremental results: ``pinned`` is
-    the persisted batch pHash frame both outputs derive from; unpersist it
-    after materializing; ``delta`` is the batch's store contribution alone
-    (disjoint from the carried store) — APPEND it to advance the on-disk
-    store in O(batch), never rewrite ``store``."""
-
-    fresh: DataFrame
-    store: DataFrame
-    pinned: DataFrame
-    delta: DataFrame
-
-
-def incremental_phash_dedupe(
-    new_batch: DataFrame,
-    phash_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    max_hamming: int = 6,
-    n_blocks: int = 9,
-    batch_phashes: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """Batch-over-batch IMAGE near-dup dedup — the fourth modality of the
-    fingerprint-store pattern (exact → lexical → semantic → perceptual).
-    The carried state is one ``(id, phash)`` row per retained image (8
-    bytes of hash); a new image is dropped when a stored pHash lies within
-    ``max_hamming`` bits of its own — candidates from the same
-    Manku block-combination tables as the text SimHash store
-    (``dedupe.simhash_combo_keys`` over the 63-bit hash), verified with
-    one ``bit_count(xor)``.  Re-encodes/resizes of stored photos are
-    combo-key mates within a few bits; exact re-uploads sit at hamming 0.
-
-    Within-batch images with IDENTICAL pHashes collapse to the min-id
-    representative first; within-batch near-dups are an at-rest pass
-    (:func:`image_near_dup_pairs` over the batch).  Undecodable blobs
-    (NULL pHash) pass through as fresh and are NOT stored — route them to
-    a PIL-backed kernel rather than silently treating them as unique
-    forever.
-
-    ``batch_phashes``: optional precomputed :func:`image_phash_frame`
-    rows (single-decode reuse when the pipeline also computes stats).
-    """
-    fp_all = (
-        batch_phashes
-        if batch_phashes is not None
-        else image_phash_frame(
-            new_batch, binary_col, id_col, decode_hook=decode_hook
-        )
-    )
-    return _incremental_fingerprint_dedupe(
-        new_batch, phash_store, fp_all, id_col, "phash",
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
 def _fp_batch_survivors(new_batch, fp_all, id_col, fp_col):
-    """Shared within-batch preamble of the classic AND key-index
-    perceptual cores — one implementation so the indexed twin's
-    equivalence can never drift: exact-hash twins collapse to the min
-    id, NULL-fingerprint rows pass through unstored, retained
-    fingerprints persist.  Returns ``(survivors, fp)`` with ``fp``
-    pinned (caller unpersists via the result's ``pinned``)."""
+    """Within-batch preamble of the perceptual key-index operators:
+    exact-hash twins collapse to the min id, NULL-fingerprint rows pass
+    through unstored, retained fingerprints persist.  Returns
+    ``(survivors, fp)`` with ``fp`` pinned (caller unpersists via the
+    result's ``pinned``)."""
     fp_ok = fp_all.where(F.col(fp_col).isNotNull())
     surv_ids = (
         fp_ok.groupBy(fp_col).agg(F.min(F.col(id_col)).alias(id_col))
@@ -1198,60 +1144,6 @@ def _fp_batch_survivors(new_batch, fp_all, id_col, fp_col):
     return survivors, fp
 
 
-def _incremental_fingerprint_dedupe(
-    new_batch: DataFrame,
-    store: DataFrame | None,
-    fp_all: DataFrame,
-    id_col: str,
-    fp_col: str,
-    *,
-    max_hamming: int,
-    n_blocks: int,
-    nbits: int = 63,
-) -> IncrementalPhashResult:
-    """Shared core of the perceptual fingerprint stores (image pHash,
-    audio spectral hash): within-batch exact-hash collapse to the min id
-    (NULL-hash rows exempt and never stored), then the Manku
-    block-combination pigeonhole join of batch hashes against the carried
-    store, verified with one ``bit_count(xor)``."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_distance,
-        simhash_combo_keys,
-    )
-
-    survivors, fp = _fp_batch_survivors(new_batch, fp_all, id_col, fp_col)
-    if store is None:
-        return IncrementalPhashResult(
-            fresh=survivors, store=fp, pinned=fp, delta=fp
-        )
-    combos = lambda c: F.explode(  # noqa: E731
-        simhash_combo_keys(c, nbits, max_hamming, n_blocks)
-    )
-    batch_keys = fp.select(
-        F.col(id_col),
-        F.col(fp_col).alias("__np"),
-        combos(F.col(fp_col)).alias("__k"),
-    ).select(id_col, "__np", "__k.combo", "__k.key")
-    store_keys = store.select(
-        F.col(fp_col).alias("__sp"),
-        combos(F.col(fp_col)).alias("__k"),
-    ).select("__sp", "__k.combo", "__k.key")
-    dropped = (
-        batch_keys.join(store_keys, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__np"), F.col("__sp"))
-            <= F.lit(max_hamming)
-        )
-        .select(id_col)
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    delta = fp.join(dropped, on=id_col, how="left_anti")
-    new_store = store.unionByName(delta)
-    return IncrementalPhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
-    )
-
-
 def _incremental_fingerprint_dedupe_indexed(
     new_batch: DataFrame,
     key_store: DataFrame | None,
@@ -1262,71 +1154,25 @@ def _incremental_fingerprint_dedupe_indexed(
     max_hamming: int,
     n_blocks: int,
     nbits: int = 63,
-) -> IncrementalPhashResult:
-    """:func:`_incremental_fingerprint_dedupe` against a PRE-EXPLODED
-    key-index store ``(combo, key, <fp_col>, id)`` — the perceptual twin
-    of ``dedupe.incremental_simhash_dedupe_indexed``.  The classic core
-    re-derives the store side's block-combination keys every batch
-    (O(store × combos) Generate per probe); here the explosion is paid
-    once at advance time and the probe joins stored columns, so a store
-    carried as a ``(combo, key)``-bucketed table is read in place.
-    Within-batch collapse, NULL-fingerprint pass-through, and the drop
-    rule are identical to the classic core (equivalence-tested); the
-    combo split (nbits/max_hamming/n_blocks) is store identity,
+) -> IncrementalSimhashResult:
+    """Shared core of the perceptual fingerprint stores (image pHash,
+    audio spectral hash, remux stream hash): the within-batch preamble
+    (:func:`_fp_batch_survivors`), then the hamming key-index probe of
+    ``dedupe`` against the carried ``(combo, key, <fp_col>, id)`` store.
+    The combo split (nbits/max_hamming/n_blocks) is store identity,
     recorded by consumers in the shared ``_simhash_index_meta.json``
     hamming-index sidecar (``dedupe.write_simhash_index_meta``)."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_distance,
-        simhash_combo_keys,
+        _hamming_index_probe,
     )
 
     survivors, fp = _fp_batch_survivors(new_batch, fp_all, id_col, fp_col)
-
-    def explode_index(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.col(id_col),
-            F.col(fp_col),
-            F.explode(
-                simhash_combo_keys(
-                    F.col(fp_col), nbits, max_hamming, n_blocks
-                )
-            ).alias("__k"),
-        ).select("__k.combo", "__k.key", fp_col, id_col)
-
-    if key_store is None:
-        delta = explode_index(fp)
-        return IncrementalPhashResult(
-            fresh=survivors, store=delta, pinned=fp, delta=delta
-        )
-    batch_keys = fp.select(
-        F.col(id_col),
-        F.col(fp_col).alias("__np"),
-        F.explode(
-            simhash_combo_keys(F.col(fp_col), nbits, max_hamming, n_blocks)
-        ).alias("__k"),
-    ).select(id_col, "__np", "__k.combo", "__k.key")
-    store_side = key_store.select(
-        "combo", "key", F.col(fp_col).alias("__sp")
+    fresh, store, delta = _hamming_index_probe(
+        survivors, fp, key_store, id_col, fp_col,
+        nbits, max_hamming, n_blocks,
     )
-    dropped = (
-        batch_keys.join(store_side, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__np"), F.col("__sp"))
-            <= F.lit(max_hamming)
-        )
-        .select(id_col)
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    # the batch's exploded rows already exist in batch_keys — derive the
-    # delta from them instead of paying a second Generate over fp
-    delta = batch_keys.join(dropped, on=id_col, how="left_anti").select(
-        "combo", "key", F.col("__np").alias(fp_col), id_col
-    )
-    new_store = key_store.select(
-        "combo", "key", fp_col, id_col
-    ).unionByName(delta)
-    return IncrementalPhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
+    return IncrementalSimhashResult(
+        fresh=fresh, store=store, pinned=fp, delta=delta
     )
 
 
@@ -1340,10 +1186,28 @@ def incremental_phash_dedupe_indexed(
     n_blocks: int = 9,
     batch_phashes: DataFrame | None = None,
     decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_phash_dedupe` against the pre-exploded
-    ``(combo, key, phash, id)`` key-index store — semantics identical,
-    probe reads a ``(combo, key)``-bucketed table in place."""
+) -> IncrementalSimhashResult:
+    """Batch-over-batch IMAGE near-dup dedup — the fourth modality of the
+    fingerprint-store pattern (exact → lexical → semantic → perceptual).
+    The carried state is the ``(combo, key, phash, id)`` key-index store
+    (``dedupe.hamming_key_index`` over the 63-bit pHash; None on the
+    first run); a new image is dropped when a stored pHash lies within
+    ``max_hamming`` bits of its own — candidates from the same Manku
+    block-combination tables as the text SimHash store, verified with
+    one ``bit_count(xor)``.  Re-encodes/resizes of stored photos are
+    combo-key mates within a few bits; exact re-uploads sit at hamming 0.
+    A ``(combo, key)``-bucketed store is read in place.
+
+    Within-batch images with IDENTICAL pHashes collapse to the min-id
+    representative first; within-batch near-dups are an at-rest pass
+    (:func:`image_near_dup_pairs` over the batch).  Undecodable blobs
+    (NULL pHash) pass through as fresh and are NOT stored — route them to
+    a PIL-backed kernel rather than silently treating them as unique
+    forever.
+
+    ``batch_phashes``: optional precomputed :func:`image_phash_frame`
+    rows (single-decode reuse when the pipeline also computes stats).
+    """
     fp_all = (
         batch_phashes
         if batch_phashes is not None
@@ -1472,35 +1336,6 @@ def audio_near_dup_pairs(
     )
 
 
-def incremental_audio_dedupe(
-    new_batch: DataFrame,
-    afp_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    max_hamming: int = 8,
-    n_blocks: int = 10,
-    batch_fingerprints: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """Batch-over-batch AUDIO near-dup dedup against a carried (id, afp)
-    store — same contract and store discipline as
-    :func:`incremental_phash_dedupe` (shared core); re-uploads and
-    re-encodes of stored recordings drop, silent/undecodable blobs pass
-    through unstored."""
-    fp_all = (
-        batch_fingerprints
-        if batch_fingerprints is not None
-        else audio_fingerprint_frame(
-            new_batch, binary_col, id_col, decode_hook=decode_hook
-        )
-    )
-    return _incremental_fingerprint_dedupe(
-        new_batch, afp_store, fp_all, id_col, "afp",
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
 def incremental_audio_dedupe_indexed(
     new_batch: DataFrame,
     key_store: DataFrame | None,
@@ -1511,10 +1346,12 @@ def incremental_audio_dedupe_indexed(
     n_blocks: int = 10,
     batch_fingerprints: DataFrame | None = None,
     decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_audio_dedupe` against the pre-exploded
-    ``(combo, key, afp, id)`` key-index store — semantics identical,
-    probe reads a ``(combo, key)``-bucketed table in place."""
+) -> IncrementalSimhashResult:
+    """Batch-over-batch AUDIO near-dup dedup against the carried
+    ``(combo, key, afp, id)`` key-index store — same contract and store
+    discipline as :func:`incremental_phash_dedupe_indexed` (shared core);
+    re-uploads and re-encodes of stored recordings drop, silent or
+    undecodable blobs pass through unstored."""
     fp_all = (
         batch_fingerprints
         if batch_fingerprints is not None
@@ -1633,11 +1470,11 @@ def audio_stream_hash_frame(
     hash cannot see.  Lossy formats (MP3/OGG) yield NULL: their PCM is
     decoder-dependent, and pretending otherwise would poison the store —
     they belong to the spectral-fingerprint tier
-    (:func:`incremental_audio_dedupe`, with a decode_hook).
+    (:func:`incremental_audio_dedupe_indexed`, with a decode_hook).
 
     Feed the result as ``batch_stream_hashes=`` to
-    :func:`incremental_remux_dedupe` for the carried-store dedup loop —
-    the exact-hash core is container-agnostic."""
+    :func:`incremental_remux_dedupe_indexed` for the carried-store dedup
+    loop — the exact-hash core is container-agnostic."""
     id_dt = df.schema[id_col].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1943,7 +1780,7 @@ def incremental_video_dedupe(
     min_overlap: float = 0.5,
     batch_frame_phashes: DataFrame | None = None,
     decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
+) -> IncrementalSimhashResult:
     """Batch-over-batch VIDEO near-dup dedup — the SIXTH modality of the
     fingerprint-store family (exact → lexical → semantic → image → audio
     → video).  The carried state is the retained clips' sampled-frame
@@ -2005,7 +1842,7 @@ def incremental_video_dedupe(
         surv_ids.select(id_col), on=id_col, how="left_semi"
     ).unionByName(undecodable)
     if frame_store is None:
-        return IncrementalPhashResult(
+        return IncrementalSimhashResult(
             fresh=survivors, store=fp, pinned=fp, delta=fp
         )
 
@@ -2052,7 +1889,7 @@ def incremental_video_dedupe(
     fresh = survivors.join(dropped, on=id_col, how="left_anti")
     delta = fp.join(dropped, on=id_col, how="left_anti")
     new_store = frame_store.unionByName(delta)
-    return IncrementalPhashResult(
+    return IncrementalSimhashResult(
         fresh=fresh, store=new_store, pinned=fp, delta=delta
     )
 
@@ -2124,46 +1961,6 @@ def video_stream_hash_frame(
     )
 
 
-def incremental_remux_dedupe(
-    new_batch: DataFrame,
-    stream_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    batch_stream_hashes: DataFrame | None = None,
-) -> IncrementalPhashResult:
-    """Batch-over-batch EXACT remux dedup: drop every clip whose
-    elementary-stream hash (:func:`video_stream_hash_frame`) is already
-    in the carried ``(id, stream_hash)`` store.  This is the cheap tier
-    in front of :func:`incremental_video_dedupe` — it catches the
-    overwhelmingly common re-upload (same encoded stream, new container
-    metadata) with 8 bytes of state per clip and an equi-join, leaving
-    only genuinely re-ENCODED copies to the frame-sampling pHash tier —
-    and it is the one video-dedup tier that is fully real for MP4/H.264
-    without a ``decode_hook``.
-
-    Same store contract as every perceptual store: within-batch twins
-    collapse to the min id, NULL-hash (unrecognized container) rows pass
-    fresh and unstored, ``pinned`` releases after materialization.
-
-    ``batch_stream_hashes``: optional precomputed
-    :func:`video_stream_hash_frame` rows (single-walk reuse when the
-    pipeline also keeps container/codec columns)."""
-    fp_all = (
-        batch_stream_hashes
-        if batch_stream_hashes is not None
-        else video_stream_hash_frame(new_batch, binary_col, id_col)
-    )
-    # max_hamming=0, n_blocks=1 ⇒ exactly one combo key carrying the
-    # full hash: the pigeonhole join degenerates to the exact equi-join
-    # this tier wants, verified by bit_count(xor) == 0
-    return _incremental_fingerprint_dedupe(
-        new_batch, stream_store,
-        fp_all.select(id_col, "stream_hash"),
-        id_col, "stream_hash", max_hamming=0, n_blocks=1,
-    )
-
-
 def incremental_remux_dedupe_indexed(
     new_batch: DataFrame,
     key_store: DataFrame | None,
@@ -2171,13 +1968,26 @@ def incremental_remux_dedupe_indexed(
     id_col: str = "media_id",
     *,
     batch_stream_hashes: DataFrame | None = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_remux_dedupe` against the key-index store.
-    At max_hamming=0 / n_blocks=1 the "index" is one (combo=0,
-    key=full-hash) row per clip — the same cardinality as the classic
-    store — so the gain here is purely the direct equi-join on stored
-    columns (zero store-side Generate/Exchange under a bucketed table),
-    and the uniform store format across the hamming family."""
+) -> IncrementalSimhashResult:
+    """Batch-over-batch EXACT remux dedup: drop every clip whose
+    elementary-stream hash (:func:`video_stream_hash_frame`) is already
+    in the carried key-index store.  This is the cheap tier in front of
+    :func:`incremental_video_dedupe` — it catches the overwhelmingly
+    common re-upload (same encoded stream, new container metadata) with
+    one equi-join, leaving only genuinely re-ENCODED copies to the
+    frame-sampling pHash tier — and it is the one video-dedup tier that
+    is fully real for MP4/H.264 without a ``decode_hook``.
+
+    At max_hamming=0 / n_blocks=1 the index is one (combo=0,
+    key=full-hash) row per clip, so the pigeonhole join degenerates to
+    the exact equi-join this tier wants, verified by bit_count(xor) == 0.
+    Same store contract as every perceptual store: within-batch twins
+    collapse to the min id, NULL-hash (unrecognized container) rows pass
+    fresh and unstored, ``pinned`` releases after materialization.
+
+    ``batch_stream_hashes``: optional precomputed
+    :func:`video_stream_hash_frame` rows (single-walk reuse when the
+    pipeline also keeps container/codec columns)."""
     fp_all = (
         batch_stream_hashes
         if batch_stream_hashes is not None

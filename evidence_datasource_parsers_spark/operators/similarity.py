@@ -741,8 +741,8 @@ def blocked_cosine_pairs(
 # ---------------------------------------------------------------------------
 # Incremental embedding near-dup dedup — the third modality of the
 # fingerprint-store pattern (exact hashes → incremental_exact_dedupe,
-# lexical near-dup → incremental_lsh_dedupe / incremental_simhash_dedupe,
-# semantic near-dup → here).  The state carried between runs is the retained
+# lexical near-dup → incremental_lsh_dedupe /
+# incremental_simhash_dedupe_indexed, semantic near-dup → here).  The state carried between runs is the retained
 # corpus's embedding column itself; candidates come from the same
 # multi-table hyperplane buckets as ann_lsh_topk, verification is exact
 # cosine.

@@ -55,3 +55,25 @@ def write_store_identity(
     with open(tmp, "w") as fh:
         json.dump({key: int(value)}, fh)
     os.replace(tmp, path)
+
+
+class ClassicStoreError(ValueError):
+    """A store in a retired on-disk form reached a probe that only reads
+    the index form: a classic hamming store (one ``(id, fingerprint)``
+    row per document, no ``combo``/``key`` columns, no
+    ``_simhash_index_meta.json`` sidecar) or a flat canon store
+    (``(canonical_id, canonical)``, no ``seg_key``).  Migrate it once —
+    ``streaming.incremental.migrate_hamming_store`` for the hamming
+    family, ``fuzzy_join.canon_segment_rows`` for canon."""
+
+
+def _require_columns(store, cols: list[str], what: str, how: str) -> None:
+    """Raise :class:`ClassicStoreError` unless the store frame carries
+    every column in ``cols``.  ``what`` names the store form expected,
+    ``how`` the migration to run."""
+    missing = [c for c in cols if c not in store.columns]
+    if missing:
+        raise ClassicStoreError(
+            f"store has columns {store.columns}, missing {missing}: it is "
+            f"not a {what}. {how}"
+        )

@@ -36,7 +36,6 @@ from evidence_datasource_parsers_spark.functions.quality import (
 from evidence_datasource_parsers_spark.operators.dedupe import (
     incremental_exact_dedupe,
     incremental_lsh_dedupe,
-    incremental_simhash_dedupe,
     incremental_simhash_dedupe_indexed,
 )
 from evidence_datasource_parsers_spark.operators.sampling import (
@@ -83,7 +82,6 @@ def refresh_corpus_batch(
     id_col: str = "doc_id",
     *,
     mode: str = "lsh",
-    simhash_index: bool = False,
     min_quality: float | None = None,
     splits: dict | None = None,
     num_shards: int = 64,
@@ -113,13 +111,13 @@ def refresh_corpus_batch(
     ``dedupe_kwargs`` pass through to the chosen incremental operator
     (num_perm/bands/k/threshold/…).
 
-    ``simhash_index=True`` (``mode='simhash'`` only) probes/advances the
-    pre-exploded KEY-INDEX store form
-    (`incremental_simhash_dedupe_indexed`: ``(combo, key, simhash, id)``
-    rows, bucketable on ``(combo, key)``) instead of the classic 16-byte
-    fingerprint store — the two store forms are NOT interchangeable;
-    pick one per store for its lifetime (migrate with
-    `simhash_key_index`).  The CLI sets this with --store-table.
+    ``prev_store`` is the carried store in the mode's form — content
+    hashes (exact), band keys (lsh), or the ``(combo, key, simhash, id)``
+    key-index rows (simhash, `incremental_simhash_dedupe_indexed`),
+    read from a plain parquet dir or a bucketed table alike.  A classic
+    one-row-per-document simhash store raises
+    ``store_meta.ClassicStoreError``; migrate it once with
+    ``streaming.incremental.migrate_hamming_store``.
 
     ``canonicalize=True`` fingerprints the Unicode-canonical text
     (textnorm.dedup_key: NFKC + casefold + whitespace collapse) instead of
@@ -215,12 +213,9 @@ def refresh_corpus_batch(
             res.fresh, res.store, res.delta, (res.pinned,)
         )
     elif mode == "simhash":
-        op = (
-            incremental_simhash_dedupe_indexed
-            if simhash_index
-            else incremental_simhash_dedupe
+        res = incremental_simhash_dedupe_indexed(
+            batch, prev_store, fp_col, id_col, **dedupe_kwargs
         )
-        res = op(batch, prev_store, fp_col, id_col, **dedupe_kwargs)
         fresh, store, delta, pinned = (
             res.fresh, res.store, res.delta, (res.pinned,)
         )
@@ -383,8 +378,8 @@ def refresh_media_batch(
 ) -> MediaRefreshResult:
     """One media-refresh iteration — the image branch of the crawl loop
     (``warc_media`` batch → perceptual dedup against the carried pHash
-    store → decode-stats gate), mirroring :func:`refresh_corpus_batch`'s
-    decisions:
+    key-index store → decode-stats gate), mirroring
+    :func:`refresh_corpus_batch`'s decisions:
 
     * **Gated images still enter the store** — an image dropped by the
       dimension gate was SEEN; its pHash persists so tomorrow's re-crawl
@@ -400,10 +395,10 @@ def refresh_media_batch(
     """
     from evidence_datasource_parsers_spark.operators.multimodal import (
         decoded_image_stats,
-        incremental_phash_dedupe,
+        incremental_phash_dedupe_indexed,
     )
 
-    res = incremental_phash_dedupe(
+    res = incremental_phash_dedupe_indexed(
         batch,
         prev_phash_store,
         binary_col,
@@ -448,14 +443,14 @@ def refresh_audio_batch(
     stream_store: DataFrame | None = None,
 ) -> MediaRefreshResult:
     """Audio twin of :func:`refresh_media_batch`: incremental spectral-
-    fingerprint dedup against the carried (id, afp) store, then an
+    fingerprint dedup against the carried afp key-index store, then an
     optional minimum-duration gate over :func:`audio_features` columns
     (re-used when the batch — a ``warc_media(content_prefix='audio/')``
     frame — already carries ``duration_s``).  Same store semantics:
     gated clips are still SEEN; undecodable blobs pass ungated/unstored.
 
     ``stream_tier=True`` runs the exact PCM-hash tier FIRST
-    (``incremental_remux_dedupe`` over ``audio_stream_hash_frame``
+    (``incremental_remux_dedupe_indexed`` over ``audio_stream_hash_frame``
     against the carried ``stream_store``): WAV re-uploads and lossless
     FLAC re-encodes of stored audio — which share the PCM MD5 by spec —
     die on an 8-byte equi-join before any sample decode.  The updated
@@ -464,15 +459,15 @@ def refresh_audio_batch(
         audio_features,
         audio_meta_frame,
         audio_stream_hash_frame,
-        incremental_audio_dedupe,
-        incremental_remux_dedupe,
+        incremental_audio_dedupe_indexed,
+        incremental_remux_dedupe_indexed,
     )
 
     pinned_extra: tuple = ()
     stream_store_out = None
     stream_delta_out = None
     if stream_tier:
-        rres = incremental_remux_dedupe(
+        rres = incremental_remux_dedupe_indexed(
             batch, stream_store, binary_col, id_col,
             batch_stream_hashes=audio_stream_hash_frame(
                 batch, binary_col, id_col
@@ -482,7 +477,7 @@ def refresh_audio_batch(
         stream_store_out = rres.store
         stream_delta_out = rres.delta
         pinned_extra = (rres.pinned,)
-    res = incremental_audio_dedupe(
+    res = incremental_audio_dedupe_indexed(
         batch,
         afp_store,
         binary_col,
@@ -547,7 +542,8 @@ def refresh_video_batch(
     unstored.
 
     ``remux_tier=True`` runs the exact elementary-stream tier FIRST
-    (``incremental_remux_dedupe`` against the carried ``stream_store``):
+    (``incremental_remux_dedupe_indexed`` against the carried
+    ``stream_store``, a stream-hash key-index store):
     re-uploads of a stored encoding in a new container die on an 8-byte
     equi-join before paying frame decode, and — because the stream hash
     needs no codec — this tier is fully real for MP4/H.264 where the
@@ -555,7 +551,7 @@ def refresh_video_batch(
     as ``MediaRefreshResult.stream_store``; persist it alongside the
     frame store."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_remux_dedupe,
+        incremental_remux_dedupe_indexed,
         incremental_video_dedupe,
         video_meta_frame,
     )
@@ -564,7 +560,7 @@ def refresh_video_batch(
     stream_store_out = None
     stream_delta_out = None
     if remux_tier:
-        rres = incremental_remux_dedupe(
+        rres = incremental_remux_dedupe_indexed(
             batch, stream_store, binary_col, id_col
         )
         batch = rres.fresh

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -333,6 +334,41 @@ SEEN_BUCKET_COLS = ["url_hash"]
 DEFAULT_SEEN_BUCKETS = int(os.environ.get("SPARK_GRAFT_SEEN_BUCKETS", "16"))
 
 
+class SelfReadingDeltaError(ValueError):
+    """A store delta whose lazy plan still scans the store it is about to
+    be appended to."""
+
+
+def _comparable_path(uri: str) -> str:
+    """A qualified Hadoop path URI (percent-encoded, as ``inputFiles()``
+    returns them) in one form for prefix comparison: decoded, and for
+    ``file:`` resolved through symlinks."""
+    parsed = urlparse(uri)
+    path = unquote(parsed.path)
+    if parsed.scheme == "file":
+        return os.path.realpath(path)
+    return f"{parsed.scheme}://{parsed.netloc}{path.rstrip('/')}"
+
+
+def _refuse_self_reading_delta(delta: DataFrame, store_dir: str) -> None:
+    """Refuse, before any write, a delta whose plan reads ``store_dir``.
+    Committing the append refreshes that path, so the lazy delta would
+    re-evaluate against the advanced store — where its own batch is
+    already "seen" — and append nothing, or a different row set than the
+    caller fetched."""
+    spark = delta.sparkSession
+    path = spark._jvm.org.apache.hadoop.fs.Path(store_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = _comparable_path(fs.makeQualified(path).toUri().toString()) + "/"
+    for uri in delta.inputFiles():
+        if _comparable_path(uri).startswith(root):
+            raise SelfReadingDeltaError(
+                f"the delta's plan scans {store_dir}, the store it "
+                "appends to: materialize the ready frame first "
+                "(ready.localCheckpoint(eager=True)), then advance"
+            )
+
+
 def advance_seen_store(
     ready: DataFrame,
     store_dir: str,
@@ -357,8 +393,12 @@ def advance_seen_store(
 
     Plain-dir form: mixed layouts are fine — parquet appends beside
     legacy bare-hash files, and probes treat missing ``last_fetch_ts``
-    as never-expiring."""
+    as never-expiring.
+
+    Raises :class:`SelfReadingDeltaError` when ``ready`` is a lazy frame
+    whose plan still scans ``store_dir``."""
     rows = _batch_store_rows(ready, now_ts)
+    _refuse_self_reading_delta(rows, store_dir)
     if store_table is None:
         from evidence_datasource_parsers_spark.streaming.incremental import (
             _refuse_plain_append,

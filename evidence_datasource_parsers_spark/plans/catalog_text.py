@@ -41,8 +41,9 @@ from evidence_datasource_parsers_spark.operators.fuzzy_join import (
 from evidence_datasource_parsers_spark.operators.dedupe import (
     char_shingles,
     exact_dedupe,
+    hamming_key_index,
     incremental_lsh_dedupe,
-    incremental_simhash_dedupe,
+    incremental_simhash_dedupe_indexed,
     lsh_candidate_pairs_from_buckets,
     lsh_fingerprints,
     minhash_signatures_exploded,
@@ -602,13 +603,15 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
     60-bit content hash — both families in one narrow pass.
 
     Leg 2 (src='incr_fresh'): the hamming-distance batch-refresh story —
-    even doc_ids play the historical corpus (their persisted
-    :func:`simhash_fingerprints` rows are the ONLY state carried, ONE
-    16-byte row per doc), odd doc_ids play a new crawl batch;
-    :func:`incremental_simhash_dedupe` drops re-crawls that exact-match OR
-    land within hamming distance {SIMHASH_MAX_HAMMING} of the store, with
-    candidates generated by the Manku-Jain-Das-Sarma block-combination
-    pigeonhole tables (C(6,3)=20 exact equi-joins — never a cross join).
+    even doc_ids play the historical corpus (their
+    :func:`simhash_fingerprints` rows exploded by
+    :func:`hamming_key_index` into the persisted key-index store, one
+    ``(combo, key)`` row per block combination), odd doc_ids play a new
+    crawl batch; :func:`incremental_simhash_dedupe_indexed` drops
+    re-crawls that exact-match OR land within hamming distance
+    {SIMHASH_MAX_HAMMING} of the store, with candidates generated by the
+    Manku-Jain-Das-Sarma block-combination pigeonhole tables (C(6,3)=20
+    exact equi-joins — never a cross join).
     The oracle replays the net semantics (min hamming <= d) directly, so a
     drift in the fingerprint, the block split, or the verify predicate
     breaks the value hash.
@@ -621,9 +624,12 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
     sig = fp.select(
         "doc_id", "content_hash", "simhash", F.lit("sig").alias("src")
     )
-    res = incremental_simhash_dedupe(
+    res = incremental_simhash_dedupe_indexed(
         d.filter(F.col("doc_id") % 2 == 1),
-        fp.filter(F.col("doc_id") % 2 == 0),
+        hamming_key_index(
+            fp.filter(F.col("doc_id") % 2 == 0), "doc_id", "simhash",
+            SIMHASH_BITS, SIMHASH_MAX_HAMMING, SIMHASH_BLOCKS,
+        ),
         "text",
         "doc_id",
         nbits=SIMHASH_BITS,

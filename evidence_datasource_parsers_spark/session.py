@@ -39,15 +39,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
         )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Local mode runs EVERYTHING (driver + all executor threads + every
-    # broadcast) in one JVM whose default heap is 1 GiB — 32 concurrent
-    # tasks thrash the GCLocker long before the machine's RAM is touched
-    # (observed: flaky BroadcastExchange failures at 10× sf0.1).  Size the
-    # heap like an executor would be sized on a cluster.  Only effective
-    # when this process launches the JVM; on a real cluster driver/executor
-    # memory comes from submit conf and this setting is inert.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    cpus, driver_mem = _session_sizing()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -79,13 +71,77 @@ def get_spark(
     # mode; refuse a session where a deployment-level legacy override would
     # silently diverge the twins from their F.lit Column forms.  (Checked,
     # not set: setting the conf trips a Spark 4 deprecation warning.)
-    if (
+    _check_parser_mode(
         spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        == "true"
-    ):
+    )
+    return spark
+
+
+def _check_parser_mode(escaped_string_literals: str) -> None:
+    """Refuse the legacy ``escapedStringLiterals`` parser mode.  Spark
+    reads boolean confs case-insensitively, so ``"TRUE"`` enables the
+    mode as surely as ``"true"`` does."""
+    if escaped_string_literals.strip().lower() == "true":
         raise RuntimeError(
             "spark.sql.parser.escapedStringLiterals=true is unsupported: "
             "the engine's SQL-string builders rely on default-mode "
             "backslash escaping"
         )
-    return spark
+
+
+def _host_cpus() -> int:
+    """Cores this process may run on (the affinity mask where the OS
+    exposes one, else ``os.cpu_count()``)."""
+    if hasattr(os, "sched_getaffinity"):
+        return max(1, len(os.sched_getaffinity(0)))
+    return max(1, os.cpu_count() or 1)
+
+
+def _host_memory_bytes() -> int | None:
+    """Physical RAM, capped by a cgroup v2 memory limit when one is set;
+    None when the platform reports neither."""
+    total = None
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        pass
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            limit = fh.read().strip()
+        if limit.isdigit():
+            total = min(total or int(limit), int(limit))
+    except OSError:
+        pass
+    return total
+
+
+def _default_driver_memory(total_bytes: int | None) -> str:
+    """Driver heap for a local-mode session on a host with
+    ``total_bytes`` of RAM: half of it, and never more than RAM less
+    4 GiB.  The rest is left to the Python workers (Arrow batches,
+    pandas kernels), the JVM's off-heap and metaspace, and the OS page
+    cache the parquet scans ride on.  At least 1 GiB; 4 GiB when the RAM
+    is unknown."""
+    if not total_bytes:
+        return "4g"
+    total_mb = total_bytes // 2**20
+    return f"{max(1024, min(total_mb // 2, total_mb - 4096))}m"
+
+
+def _session_sizing(environ=None) -> tuple[str, str]:
+    """``(cpus, driver_memory)`` for :func:`get_spark`: the
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` overrides when set,
+    else sized from this host.
+
+    Local mode runs the driver, every executor thread and every
+    broadcast in one JVM whose built-in default heap is 1 GiB — too
+    small for the scaled runs (flaky BroadcastExchange failures at 10×
+    sf0.1) — while a heap larger than the host's RAM gets the JVM
+    OOM-killed once the heap grows.  Only effective when this process
+    launches the JVM; on a cluster, memory comes from the submit conf."""
+    env = os.environ if environ is None else environ
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
+    mem = env.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(
+        _host_memory_bytes()
+    )
+    return cpus, mem

@@ -122,8 +122,8 @@ def copy_store_sidecars(
     A compaction rewrites the PARQUET files but must not lose the
     sidecars that make the store probeable: dropping
     ``_simhash_index_meta.json`` in the swap strands a key-index store
-    behind the (misleading) 'classic store must be MIGRATED' refusal
-    until someone hand-stamps it (ADVICE r12).  Files already present in
+    behind the missing-sidecar ``ClassicStoreError`` refusal until
+    someone hand-stamps it (ADVICE r12).  Files already present in
     ``dst_dir`` (e.g. the fresh ``_bucket_spec.json`` a bucketed rewrite
     just stamped) are left alone.  Returns the copied names.
     """
@@ -281,8 +281,8 @@ def create_bucketed_store_atomic(
     The point is the crash window ADVICE r12 flagged: stamping the
     hamming sidecar AFTER a direct ``write_bucketed_store`` at the live
     path leaves, on a crash between the two, a store that
-    ``_check_hamming_index_meta`` refuses with the wrong diagnosis
-    ('classic store must be MIGRATED').  Here a crash before the rename
+    ``_check_hamming_index_meta`` refuses as if it were a classic
+    store.  Here a crash before the rename
     leaves NO store at all — :func:`recover_store_dir` sweeps the
     orphaned tmp and the replayed batch recreates it; a crash after the
     rename leaves the complete store, sidecars included.  The catalog
@@ -337,29 +337,32 @@ def _index_identity(mode: str, dedupe_opts: dict) -> dict:
 
 def _check_hamming_index_meta(store_dir: str, ident: dict) -> None:
     """Validate a hamming key-index store's combo-split sidecar against
-    the sink's configuration — a store probed under a different
-    (nbits, max_hamming, n_blocks) silently MISSES near-dups, so
-    missing/mismatched sidecars refuse, like the span cap / canon k."""
+    the caller's configuration — a store probed under a different
+    (nbits, max_hamming, n_blocks) silently MISSES near-dups, so a
+    mismatched sidecar refuses, like the span cap / canon k.  A store
+    dir with NO sidecar is a classic one-row-per-document store (that
+    form never stamped one) or a key-index store whose stamp was lost:
+    refused with ``store_meta.ClassicStoreError``."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
         read_simhash_index_meta,
+    )
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        ClassicStoreError,
     )
 
     if not os.path.isdir(store_dir):
         return
     recorded = read_simhash_index_meta(store_dir)
     if recorded is None:
-        raise ValueError(
-            f"hamming index store {store_dir} has no "
-            "_simhash_index_meta.json sidecar: its combo split is "
-            f"unknown and probing it under {ident} could miss "
-            "near-dups. A fresh KEY-INDEX store just needs the stamp "
-            "(write_simhash_index_meta with the true split); a CLASSIC "
-            "fingerprint store from earlier rounds must be MIGRATED "
-            "first — explode it with simhash_key_index (or the "
-            "multimodal fingerprint frame + the same builder), write it "
-            "with sinks.write_bucketed_store(['combo', 'key'], n), then "
-            "stamp — classic rows have no combo/key columns and cannot "
-            "be probed by the index path."
+        raise ClassicStoreError(
+            f"hamming store {store_dir} has no _simhash_index_meta.json "
+            "sidecar, so its combo split is unknown and probing it under "
+            f"{ident} could miss near-dups. A classic one-row-per-document "
+            "fingerprint store must be migrated once with "
+            "migrate_hamming_store (it rewrites the dir into the "
+            "(combo, key) key-index form and stamps the sidecar); a "
+            "key-index store that lost its stamp just needs "
+            "write_simhash_index_meta with its true split."
         )
     if recorded != ident:
         raise ValueError(
@@ -369,11 +372,57 @@ def _check_hamming_index_meta(store_dir: str, ident: dict) -> None:
         )
 
 
+#: The fingerprint column each hamming mode's key-index store carries.
+HAMMING_FP_COL: dict[str, str] = {
+    "simhash": "simhash",
+    "phash": "phash",
+    "audio": "afp",
+    "remux": "stream_hash",
+}
+
+
+def migrate_hamming_store(
+    spark, store_dir: str, mode: str, id_col: str, **dedupe_opts
+) -> int:
+    """Rewrite a classic hamming store — one ``(id, <fingerprint>)`` row
+    per document, as the retired classic operators wrote it — into the
+    ``(combo, key, <fingerprint>, id)`` key-index form in place, as a
+    plain directory, and stamp its ``_simhash_index_meta.json`` sidecar.
+    The index is derived from the store's own fingerprint column; no
+    document is re-read.  ``dedupe_opts`` give the split the store will
+    be probed with (the same knobs the sink takes: nbits for simhash,
+    max_hamming/n_blocks for simhash/phash/audio).  Returns the index row
+    count.  To move the migrated store into a bucketed table, compact it
+    with ``compact --kind fingerprint --table T --bucket-col combo,key``.
+
+    The index and its sidecar are written into a tmp sibling and swapped
+    in whole, so a crash leaves either the classic dir, untouched and
+    still refused, or the complete stamped index."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
+        write_simhash_index_meta,
+    )
+
+    ident = _index_identity(mode, dedupe_opts)
+    recover_store_dir(store_dir)
+    classic = spark.read.parquet(store_dir)
+    if "combo" in classic.columns:
+        raise ValueError(f"{store_dir} is already a key-index store")
+    index = hamming_key_index(
+        classic, id_col, HAMMING_FP_COL[mode], **ident
+    ).localCheckpoint(eager=True)
+    n = index.count()
+    tmp = f"{store_dir}__swap_{uuid.uuid4().hex[:8]}"
+    index.write.parquet(tmp)
+    write_simhash_index_meta(tmp, **ident)
+    swap_store_dir(store_dir, tmp)
+    return n
+
+
 #: Modes whose per-batch store probe joins on STORED columns directly —
 #: exactly these can ride a bucketed store table with zero store-side
 #: Exchange.  The hamming family (simhash/phash/audio/remux) qualifies
-#: through its KEY-INDEX store form (`incremental_simhash_dedupe_indexed`
-#: / `multimodal._incremental_fingerprint_dedupe_indexed`: the
+#: through its key-index store (`dedupe.hamming_key_index`: the
 #: block-combination keys are persisted, not re-derived per batch).
 #: ``video`` stays out (its overlap rule needs a store-wide per-clip
 #: frame-count aggregate regardless of layout) and so does
@@ -545,30 +594,27 @@ def incremental_dedupe_sink(
       * ``'lsh'``    — MinHash-LSH fingerprints: a re-crawl with a few
         changed words is still dropped (`incremental_lsh_dedupe`);
       * ``'simhash'`` — hamming-distance fingerprints
-        (`incremental_simhash_dedupe`; with ``store_table`` the
-        key-index form `incremental_simhash_dedupe_indexed`);
+        (`incremental_simhash_dedupe_indexed`);
       * ``'embedding'`` — semantic re-embeds dropped against an INT8
         vector store (`quantize.incremental_embedding_dedupe_quantized`);
         ``text_col`` names the vector column.
       * ``'phash'`` — perceptual IMAGE near-dup: re-encoded/resized
-        copies of stored photos dropped against an (id, phash) store
-        (`multimodal.incremental_phash_dedupe`; with ``store_table``
-        the key-index form); ``text_col`` names the binary blob column.
+        copies of stored photos dropped
+        (`multimodal.incremental_phash_dedupe_indexed`); ``text_col``
+        names the binary blob column.
       * ``'audio'`` — perceptual AUDIO near-dup: re-rendered/resampled
-        copies of stored recordings dropped against an (id, afp)
-        spectral-fingerprint store (`multimodal.incremental_audio_dedupe`;
-        with ``store_table`` the key-index form); ``text_col`` names the
-        binary blob column.
+        copies of stored recordings dropped against their spectral
+        fingerprints (`multimodal.incremental_audio_dedupe_indexed`);
+        ``text_col`` names the binary blob column.
       * ``'video'`` — clip-level near-dup: re-encoded/re-muxed copies of
         stored clips dropped against an (id, frame_idx, phash)
         sampled-frame store (`multimodal.incremental_video_dedupe`);
         ``text_col`` names the binary blob column.
       * ``'remux'`` — exact elementary-stream dedup: the same encoded
-        video repackaged in a new container dropped against an
-        (id, stream_hash) store (`multimodal.incremental_remux_dedupe`;
-        with ``store_table`` the key-index form); no codec needed, so
-        this tier is fully real for MP4/H.264; ``text_col`` names the
-        binary blob column.
+        video repackaged in a new container dropped against its stream
+        hash (`multimodal.incremental_remux_dedupe_indexed`); no codec
+        needed, so this tier is fully real for MP4/H.264; ``text_col``
+        names the binary blob column.
       * ``'span'`` — exact substring dedup: duplicated token spans are
         EXCISED (documents are rewritten, not dropped — every batch doc is
         appended with clean_text/n_tokens/n_removed_tokens) against a
@@ -581,42 +627,38 @@ def incremental_dedupe_sink(
         store identity, validated against the ``_canon_store_meta.json``
         sidecar like the span cap.
 
+    The hamming modes (simhash/phash/audio/remux) carry the key-index
+    store ``(combo, key, <fingerprint>, id)`` (`dedupe.hamming_key_index`):
+    the block-combination keys are persisted when a batch joins the
+    store, so each probe equi-joins stored columns.  Their combo split is
+    store identity, validated against (and stamped into) the
+    ``_simhash_index_meta.json`` sidecar; a classic one-row-per-document
+    store from earlier versions has no sidecar and is refused with
+    ``store_meta.ClassicStoreError`` — migrate it once with
+    :func:`migrate_hamming_store`.
+
     ``store_table``: name a session-catalog TABLE for the store and the
     sink carries it BUCKETED on the mode's probe-join key
     (:data:`SINK_BUCKET_COLS`) — the per-batch probe then reads the
     store in place and shuffles only the batch into the store's bucket
     layout (plan-asserted in tests/test_plan_shapes.py), the same
     zero-store-side-Exchange plan the library operators get from
-    ``sinks.read_bucketed_store``.  Without it the store is read as
-    plain parquet: correct, but once the store outgrows AQE's broadcast
-    threshold every micro-batch re-shuffles O(store) rows — at corpus
-    scale a long-running stream pays that forever, which is the cost
-    the bucketed layout exists to avoid.  The table's bucket spec also
-    lands in a ``_bucket_spec.json`` sidecar, so a RESTARTED stream (new
-    session, empty in-memory catalog) re-registers the table from the
-    files instead of degrading to the plain read.  Only the modes whose
-    probe can join on stored columns accept it: exact/lsh/span/canon
-    directly, and the hamming family (simhash/phash/audio/remux) through
-    their KEY-INDEX store forms — the ``*_indexed`` operators persist
-    the block-combination keys, so the probe equi-joins stored
-    ``(combo, key)`` columns AND skips the classic forms' per-batch
-    O(store × combos) re-explode; their combo split is store identity,
-    validated against (and stamped into) the shared
-    ``_simhash_index_meta.json`` sidecar.  NOTE the two store FORMS are
-    not interchangeable: a classic store carried without ``store_table``
-    must be migrated once (``simhash_key_index`` /
-    ``multimodal`` fingerprint frames → ``sinks.write_bucketed_store``
-    on ``(combo, key)`` → ``write_simhash_index_meta``) before this
-    flag can probe it.  ``video`` refuses the flag (its overlap rule
-    needs a store-wide per-clip frame-count aggregate regardless of
-    layout), as does ``embedding`` (hyperplane bucket keys are derived
-    from the vectors at probe time).  Size
-    ``store_buckets`` for the store's TARGET size, not the first
-    batch's.  Compact a table-backed store with
-    :func:`rewrite_bucketed_store` (CLI: ``compact --table``) — the same
-    tmp+swap discipline as plain dirs plus the catalog re-registration;
-    never call ``write_bucketed_store`` directly at the live store path
-    (an overwrite onto the dir the input's lineage still reads).
+    ``sinks.read_bucketed_store``.  Without it the store is a plain
+    parquet dir of the same rows: correct, but once the store outgrows
+    AQE's broadcast threshold every micro-batch re-shuffles O(store)
+    rows.  The table's bucket spec also lands in a ``_bucket_spec.json``
+    sidecar, so a RESTARTED stream (new session, empty in-memory
+    catalog) re-registers the table from the files instead of degrading
+    to the plain read.  ``video`` and ``embedding`` refuse the flag
+    (video's overlap rule needs a store-wide per-clip frame-count
+    aggregate regardless of layout; embedding's hyperplane bucket keys
+    are derived from the vectors at probe time).  Size ``store_buckets``
+    for the store's TARGET size, not the first batch's.  Compact a
+    table-backed store with :func:`rewrite_bucketed_store` (CLI:
+    ``compact --table``) — the same tmp+swap discipline as plain dirs
+    plus the catalog re-registration; never call
+    ``write_bucketed_store`` directly at the live store path (an
+    overwrite onto the dir the input's lineage still reads).
 
     ``dedupe_opts`` pass through to the chosen operator (num_perm/bands/k
     for lsh — including the production ``hot_bucket_cap`` guard;
@@ -680,57 +722,22 @@ def incremental_dedupe_sink(
                 ).withColumn(
                     "stream_batch_id", F.lit(batch_id).cast("long")
                 ).write.mode("append").parquet(provenance_dir)
-        elif mode == "simhash":
-            if store_table is not None:
-                # key-INDEX store (pre-exploded (combo, key) rows)
-                _check_hamming_index_meta(
-                    store_dir, _index_identity("simhash", dedupe_opts)
-                )
-                res = dd.incremental_simhash_dedupe_indexed(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            else:
-                res = dd.incremental_simhash_dedupe(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            fresh, new_store, delta = res.fresh, res.store, res.delta
-            fresh = fresh.persist()
-        elif mode == "phash":
-            from evidence_datasource_parsers_spark.operators.multimodal import (  # noqa: E501
-                incremental_phash_dedupe,
-                incremental_phash_dedupe_indexed,
+        elif mode in HAMMING_INDEX_IDENTITY:
+            from evidence_datasource_parsers_spark.operators import (
+                multimodal as mm,
             )
 
-            if store_table is not None:
-                _check_hamming_index_meta(
-                    store_dir, _index_identity("phash", dedupe_opts)
-                )
-                res = incremental_phash_dedupe_indexed(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            else:
-                res = incremental_phash_dedupe(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            fresh, new_store, delta = res.fresh, res.store, res.delta
-            fresh = fresh.persist()
-        elif mode == "audio":
-            from evidence_datasource_parsers_spark.operators.multimodal import (  # noqa: E501
-                incremental_audio_dedupe,
-                incremental_audio_dedupe_indexed,
+            # the key-index store's combo split is its identity
+            _check_hamming_index_meta(
+                store_dir, _index_identity(mode, dedupe_opts)
             )
-
-            if store_table is not None:
-                _check_hamming_index_meta(
-                    store_dir, _index_identity("audio", dedupe_opts)
-                )
-                res = incremental_audio_dedupe_indexed(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            else:
-                res = incremental_audio_dedupe(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
+            op = {
+                "simhash": dd.incremental_simhash_dedupe_indexed,
+                "phash": mm.incremental_phash_dedupe_indexed,
+                "audio": mm.incremental_audio_dedupe_indexed,
+                "remux": mm.incremental_remux_dedupe_indexed,
+            }[mode]
+            res = op(batch_df, store, text_col, id_col, **dedupe_opts)
             fresh, new_store, delta = res.fresh, res.store, res.delta
             fresh = fresh.persist()
         elif mode == "video":
@@ -741,25 +748,6 @@ def incremental_dedupe_sink(
             res = incremental_video_dedupe(
                 batch_df, store, text_col, id_col, **dedupe_opts
             )
-            fresh, new_store, delta = res.fresh, res.store, res.delta
-            fresh = fresh.persist()
-        elif mode == "remux":
-            from evidence_datasource_parsers_spark.operators.multimodal import (  # noqa: E501
-                incremental_remux_dedupe,
-                incremental_remux_dedupe_indexed,
-            )
-
-            if store_table is not None:
-                _check_hamming_index_meta(
-                    store_dir, _index_identity("remux", dedupe_opts)
-                )
-                res = incremental_remux_dedupe_indexed(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
-            else:
-                res = incremental_remux_dedupe(
-                    batch_df, store, text_col, id_col, **dedupe_opts
-                )
             fresh, new_store, delta = res.fresh, res.store, res.delta
             fresh = fresh.persist()
         elif mode == "canon":
@@ -869,7 +857,7 @@ def incremental_dedupe_sink(
                 )
 
                 write_canon_store_meta(d, dedupe_opts.get("max_dist", 2))
-            if store_table is not None and mode in HAMMING_INDEX_IDENTITY:
+            if mode in HAMMING_INDEX_IDENTITY:
                 # the CHECKED identity is the STAMPED identity — one
                 # resolver, so the gate can never certify a split the
                 # probe didn't use (review finding r12)

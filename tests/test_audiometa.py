@@ -123,7 +123,7 @@ def test_audio_stream_hash_wav_flac_cross_container(spark):
     NULL (never stored)."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
         audio_stream_hash_frame,
-        incremental_remux_dedupe,
+        incremental_remux_dedupe_indexed,
     )
 
     pcm = ((np.arange(4000) * 37) % 2001 - 1000).astype("<i2")
@@ -143,7 +143,7 @@ def test_audio_stream_hash_wav_flac_cross_container(spark):
     assert h1[1].container == "wav" and h1[1].stream_hash is not None
     assert h1[1].stream_hash != h1[2].stream_hash
 
-    r1 = incremental_remux_dedupe(
+    r1 = incremental_remux_dedupe_indexed(
         b1, None, batch_stream_hashes=audio_stream_hash_frame(b1)
     )
     store = r1.store.localCheckpoint(eager=True)
@@ -159,7 +159,7 @@ def test_audio_stream_hash_wav_flac_cross_container(spark):
     assert h2[10].stream_hash == h1[1].stream_hash
     assert h2[11].stream_hash is None
 
-    r2 = incremental_remux_dedupe(
+    r2 = incremental_remux_dedupe_indexed(
         b2, store, batch_stream_hashes=audio_stream_hash_frame(b2)
     )
     assert {r.media_id for r in r2.fresh.select("media_id").collect()} \

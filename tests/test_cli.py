@@ -738,6 +738,83 @@ def test_refresh_cli_simhash_index_table_two_rounds(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_classic_simhash_store_refused_then_migrated(spark, tmp_path, capsys):
+    """A classic one-row-per-document simhash store, as the retired
+    classic operator wrote it: `refresh` refuses it (exit 2, naming the
+    migration); migrate_hamming_store rewrites it in place from its own
+    fingerprint column and stamps the sidecar; a probe against the
+    migrated store drops exactly the ids a brute-force min-hamming replay
+    drops; and the CLI then advances it."""
+    from hamming_oracle import replay_hamming_dedupe
+
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        incremental_simhash_dedupe_indexed,
+        read_simhash_index_meta,
+        simhash_fingerprints,
+        write_simhash_index_meta,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        migrate_hamming_store,
+    )
+
+    base_txt = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm windowsill in the late afternoon sun "
+        "and distant birds sing quietly across the shaded garden path"
+    )
+    stored_docs = spark.createDataFrame(
+        [(1, base_txt), (2, "some other original document body entirely")],
+        "doc_id long, text string",
+    )
+    classic = simhash_fingerprints(stored_docs, "text", "doc_id")
+    store = str(tmp_path / "classic_sh")
+    classic.write.parquet(store)
+    batch_rows = [
+        (10, base_txt.replace("afternoon", "evening")),  # near re-crawl
+        (11, "completely unrelated content about distributed query "
+             "engines partitioning shuffle exchanges and plans"),
+        (12, base_txt),                                  # exact re-crawl
+    ]
+    b = str(tmp_path / "classic_sh_batch")
+    spark.createDataFrame(
+        batch_rows, "doc_id long, text string"
+    ).write.parquet(b)
+    out = str(tmp_path / "classic_sh_out")
+    args = ["refresh", "--batch", b, "--store", store, "--out", out,
+            "--mode", "simhash"]
+
+    assert main(args) == 2
+    assert "migrate_hamming_store" in capsys.readouterr().err
+    # a classic dir carrying a sidecar anyway (stamped by hand) passes the
+    # sidecar check and is refused by the operator's column check, still
+    # as the CLI's message + exit 2
+    write_simhash_index_meta(store, nbits=32, max_hamming=3, n_blocks=6)
+    assert main(args) == 2
+    assert "missing ['combo', 'key']" in capsys.readouterr().err
+
+    assert migrate_hamming_store(spark, store, "simhash", "doc_id") == 2 * 20
+    assert read_simhash_index_meta(store) == {
+        "nbits": 32, "max_hamming": 3, "n_blocks": 6,
+    }
+    batch = spark.read.parquet(b)
+    [(expected, _kept)] = replay_hamming_dedupe(
+        [[(r.doc_id, r.content_hash, r.simhash) for r in
+          simhash_fingerprints(batch, "text", "doc_id").collect()]],
+        max_hamming=3,
+        store=[r.simhash for r in classic.collect()],
+    )
+    assert expected == {11}
+    res = incremental_simhash_dedupe_indexed(
+        batch, spark.read.parquet(store), "text", "doc_id"
+    )
+    assert {r.doc_id for r in res.fresh.collect()} == expected
+    res.pinned.unpersist()
+
+    assert main(args) == 0
+    assert {r.doc_id for r in spark.read.parquet(out).collect()} == expected
+    assert spark.read.parquet(store).select("doc_id").distinct().count() == 3
+
+
 def test_refresh_cli_store_errors_exit_2(spark, tmp_path, capsys):
     """refresh keeps the message+exit-2 CLI contract _compact follows for
     the same store-layer refusals (ADVICE r13): --store-table against a

@@ -181,8 +181,8 @@ def test_full_crawl_two_runs_all_modalities(spark, tmp_path):
     assert aud_urls == {"http://site/s1.wav"}
     assert vid_urls == {"http://site/v1.avi"}
     # stores grew by exactly the survivors
-    assert res2.media.store.count() == 2
-    assert res2.audio.store.count() == 2
+    assert res2.media.store.select("media_id").distinct().count() == 2
+    assert res2.audio.store.select("media_id").distinct().count() == 2
     assert res2.video.store.count() == 12  # 6 sampled frames x 2 clips
     res2.done()
 

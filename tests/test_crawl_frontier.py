@@ -187,6 +187,33 @@ def test_advance_seen_store_is_append_only(spark, tmp_path):
     assert spark.read.parquet(store).count() == 2
 
 
+@pytest.mark.parametrize("name", ["seen", "my seen 50%"])
+def test_advance_seen_store_refuses_lazy_self_reading_delta(
+    spark, tmp_path, name
+):
+    """A lazy ready frame whose plan scans the store it advances is
+    refused by name before anything is written; the materialized frame
+    advances.  A space or ``%`` in the store path (percent-encoded in the
+    plan's file URIs) must not hide the self-read."""
+    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
+        SelfReadingDeltaError,
+    )
+
+    store = str(tmp_path / name)
+    r1 = plan_fetch_batch(_cands(spark, ["http://s.example/a"]), None, None)
+    advance_seen_store(r1.ready.localCheckpoint(eager=True), store)
+    files_before = sorted(os.listdir(store))
+    r2 = plan_fetch_batch(
+        _cands(spark, ["http://s.example/a", "http://s.example/b"]),
+        spark.read.parquet(store), None,
+    )
+    with pytest.raises(SelfReadingDeltaError, match="materialize"):
+        advance_seen_store(r2.ready, store)
+    assert sorted(os.listdir(store)) == files_before
+    advance_seen_store(r2.ready.localCheckpoint(eager=True), store)
+    assert spark.read.parquet(store).count() == 2
+
+
 def test_compact_seen_store(spark, tmp_path):
     """Compaction collapses re-fetch history to max-ts per hash and is
     swap-safe; legacy bare stores just dedupe."""

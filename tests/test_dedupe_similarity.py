@@ -733,10 +733,11 @@ def test_simhash_combo_keys_match_python_and_pigeonhole(spark):
 
 def test_incremental_simhash_dedupe_recrawl(spark):
     """A one-word-changed re-crawl (hamming 2 at 32 bits) is dropped; a
-    genuinely new doc (hamming 8) survives; exact copies are dropped via
-    the hash leg; the store grows by exactly the survivors."""
+    genuinely new doc (hamming 8) survives; exact copies are dropped as
+    hamming-0 combo mates; the key-index store grows by exactly the
+    survivors' C(6,3)=20 rows each."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        incremental_simhash_dedupe,
+        incremental_simhash_dedupe_indexed,
     )
 
     base = (
@@ -754,20 +755,20 @@ def test_incremental_simhash_dedupe_recrawl(spark):
         [(1, base), (2, "some other original document body entirely")],
         "doc_id long, text string",
     )
-    r1 = incremental_simhash_dedupe(b1, None, "text", "doc_id")
+    r1 = incremental_simhash_dedupe_indexed(b1, None, "text", "doc_id")
     assert {r.doc_id for r in r1.fresh.collect()} == {1, 2}
-    assert r1.store.count() == 2  # ONE row per doc, not bands rows
+    assert r1.store.count() == 2 * 20  # one row per (doc, combo)
     r1.pinned.unpersist()
 
     b2 = spark.createDataFrame(
         [(10, recrawl), (11, novel), (12, base)],
         "doc_id long, text string",
     )
-    r2 = incremental_simhash_dedupe(b2, r1.store, "text", "doc_id")
+    r2 = incremental_simhash_dedupe_indexed(b2, r1.store, "text", "doc_id")
     assert {r.doc_id for r in r2.fresh.collect()} == {11}
-    assert r2.store.count() == 3
+    assert r2.store.count() == 3 * 20
     # replay idempotence: same batch against the updated store → nothing new
-    r3 = incremental_simhash_dedupe(b2, r2.store, "text", "doc_id")
+    r3 = incremental_simhash_dedupe_indexed(b2, r2.store, "text", "doc_id")
     assert r3.fresh.count() == 0
     r2.pinned.unpersist()
     r3.pinned.unpersist()
@@ -779,7 +780,7 @@ def test_incremental_simhash_dedupe_null_and_within_batch(spark):
     import pytest as _pytest
 
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        incremental_simhash_dedupe,
+        incremental_simhash_dedupe_indexed,
         simhash_combo_keys,
     )
 
@@ -787,13 +788,13 @@ def test_incremental_simhash_dedupe_null_and_within_batch(spark):
         [(1, None), (2, "real text here with several words"), (3, None)],
         "doc_id long, text string",
     )
-    r1 = incremental_simhash_dedupe(b1, None, "text", "doc_id")
+    r1 = incremental_simhash_dedupe_indexed(b1, None, "text", "doc_id")
     assert {r.doc_id for r in r1.fresh.collect()} == {1, 2}  # 3 → in-batch dup
     b2 = spark.createDataFrame(
         [(10, None), (11, "brand new words never seen before anywhere")],
         "doc_id long, text string",
     )
-    r2 = incremental_simhash_dedupe(b2, r1.store, "text", "doc_id")
+    r2 = incremental_simhash_dedupe_indexed(b2, r1.store, "text", "doc_id")
     assert {r.doc_id for r in r2.fresh.collect()} == {11}
     assert r2.store.select("doc_id").distinct().count() == 3
     r1.pinned.unpersist()
@@ -807,8 +808,9 @@ def test_incremental_dedupe_fingerprint_reuse_paths_agree(spark):
     path, for both the LSH and SimHash incremental operators (same
     survivors, same store contents)."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
         incremental_lsh_dedupe,
-        incremental_simhash_dedupe,
+        incremental_simhash_dedupe_indexed,
         lsh_fingerprints,
         simhash_fingerprints,
     )
@@ -849,9 +851,12 @@ def test_incremental_dedupe_fingerprint_reuse_paths_agree(spark):
     assert key(a.store) == key(b.store)
     a.pinned.unpersist(); b.pinned.unpersist()
 
-    sh_store = simhash_fingerprints(store_docs, "text", "doc_id")
-    c = incremental_simhash_dedupe(batch, sh_store, "text", "doc_id")
-    e = incremental_simhash_dedupe(
+    sh_store = hamming_key_index(
+        simhash_fingerprints(store_docs, "text", "doc_id"),
+        "doc_id", "simhash", 32, 3, 6,
+    )
+    c = incremental_simhash_dedupe_indexed(batch, sh_store, "text", "doc_id")
+    e = incremental_simhash_dedupe_indexed(
         batch, sh_store, "text", "doc_id",
         batch_fingerprints=simhash_fingerprints(batch, "text", "doc_id"),
     )
@@ -860,7 +865,7 @@ def test_incremental_dedupe_fingerprint_reuse_paths_agree(spark):
         == {r.doc_id for r in e.fresh.collect()}
     )
     skey = lambda df: sorted(  # noqa: E731
-        (r.doc_id, r.content_hash, r.simhash) for r in df.collect()
+        (r.doc_id, r.combo, r.key, r.simhash) for r in df.collect()
     )
     assert skey(c.store) == skey(e.store)
     c.pinned.unpersist(); e.pinned.unpersist()
@@ -1283,15 +1288,17 @@ def test_estimated_jaccard_bounds_num_perm():
         estimated_jaccard(F.col("a"), F.col("b"), 65)
 
 
-def test_indexed_simhash_equals_classic(spark):
-    """The KEY-INDEX store form must be batch-for-batch indistinguishable
-    from the classic operator: same fresh ids, same retained documents,
-    with the store holding C(6,3)=20 pre-exploded rows per doc instead of
-    re-deriving them per probe."""
+def test_indexed_simhash_matches_min_hamming_oracle(spark):
+    """Batch-for-batch, the key-index operator drops exactly what a
+    brute-force min-hamming replay over the collected fingerprints drops,
+    and its store holds C(6,3)=20 pre-exploded rows per kept doc — the
+    rows :func:`hamming_key_index` builds from those fingerprints."""
+    from hamming_oracle import replay_hamming_dedupe
+
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        incremental_simhash_dedupe,
+        hamming_key_index,
         incremental_simhash_dedupe_indexed,
-        simhash_key_index,
+        simhash_fingerprints,
     )
 
     base = (
@@ -1307,37 +1314,68 @@ def test_indexed_simhash_equals_classic(spark):
               "engines partitioning shuffle exchanges and plans"),
          (12, base)],                                   # exact re-crawl
         [(20, base.replace("afternoon", "evening")),    # replay of 10
-         (21, "yet another genuinely novel body of text about nothing")],
+         (21, "yet another genuinely novel body of text about nothing"),
+         (22, None)],                                   # NULL re-crawl
     ]
-    classic_store = None
-    indexed_store = None
-    for rows in batches:
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        rc = incremental_simhash_dedupe(b, classic_store, "text", "doc_id")
-        ri = incremental_simhash_dedupe_indexed(
-            b, indexed_store, "text", "doc_id"
-        )
-        assert (
-            {r.doc_id for r in rc.fresh.collect()}
-            == {r.doc_id for r in ri.fresh.collect()}
-        ), rows
-        classic_store = rc.store.localCheckpoint(eager=True)
-        indexed_store = ri.store.localCheckpoint(eager=True)
-        rc.pinned.unpersist()
-        ri.pinned.unpersist()
-    # index cardinality: exactly C(6,3)=20 rows per retained doc, and the
-    # retained doc set matches the classic store's
-    assert indexed_store.count() == classic_store.count() * 20
-    assert (
-        {r.doc_id for r in indexed_store.select("doc_id").distinct().collect()}
-        == {r.doc_id for r in classic_store.select("doc_id").collect()}
+    frames = [
+        spark.createDataFrame(rows, "doc_id long, text string")
+        for rows in batches
+    ]
+    expected = replay_hamming_dedupe(
+        [
+            [(r.doc_id, r.content_hash, r.simhash) for r in
+             simhash_fingerprints(b, "text", "doc_id").collect()]
+            for b in frames
+        ],
+        max_hamming=3,
     )
-    # the one-shot migration builder reproduces the carried index exactly
-    migrated = simhash_key_index(
-        classic_store, "doc_id", nbits=32, max_hamming=3, n_blocks=6
+    assert [e[0] for e in expected] == [{1, 2, 3}, {11}, {21}]  # non-vacuous
+    store = None
+    kept_all = set()
+    for b, (fresh_ids, kept_ids) in zip(frames, expected):
+        res = incremental_simhash_dedupe_indexed(b, store, "text", "doc_id")
+        assert {r.doc_id for r in res.fresh.collect()} == fresh_ids
+        store = res.store.localCheckpoint(eager=True)
+        res.pinned.unpersist()
+        kept_all |= kept_ids
+    assert store.count() == 20 * len(kept_all)
+    rebuilt = hamming_key_index(
+        simhash_fingerprints(
+            frames[0].unionByName(frames[1]).unionByName(frames[2]).where(
+                F.col("doc_id").isin(*kept_all)
+            ),
+            "text", "doc_id",
+        ),
+        "doc_id", "simhash", 32, 3, 6,
     )
-    assert migrated.exceptAll(indexed_store).count() == 0
-    assert indexed_store.exceptAll(migrated).count() == 0
+    assert rebuilt.exceptAll(store).count() == 0
+    assert store.exceptAll(rebuilt).count() == 0
+
+
+def test_classic_simhash_store_refused_by_name(spark):
+    """A classic one-row-per-document fingerprint store has no
+    ``combo``/``key`` columns: the key-index probe refuses it with the
+    named error instead of failing inside the join."""
+    import pytest
+
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        incremental_simhash_dedupe_indexed,
+        simhash_fingerprints,
+    )
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        ClassicStoreError,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "stored text body"), (2, "another stored body")],
+        "doc_id long, text string",
+    )
+    classic = simhash_fingerprints(docs, "text", "doc_id")
+    batch = spark.createDataFrame(
+        [(10, "stored text body")], "doc_id long, text string"
+    )
+    with pytest.raises(ClassicStoreError, match="combo"):
+        incremental_simhash_dedupe_indexed(batch, classic, "text", "doc_id")
 
 
 def test_sql_string_builders_plan_equal_column_forms(spark):

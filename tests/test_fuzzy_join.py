@@ -241,17 +241,22 @@ def test_property_self_join_matches_bruteforce(spark_prop, strs, k):
     assert got == brute_pairs(strs, k)
 
 
+def _reps(seg):
+    """The (canonical_id, canonical) representatives a segment store holds."""
+    return {(r.canonical_id, r.canonical) for r in seg.collect()}
+
+
 def test_incremental_canonicalize_two_rounds(spark):
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
         canonicalize_labels,
-        incremental_canonicalize,
+        incremental_canonicalize_indexed,
     )
 
     b1 = spark.createDataFrame(
         [(1, "colour"), (2, "color"), (10, "flavour"), (20, "unique one")],
         "id long, s string",
     )
-    r1 = incremental_canonicalize(b1, None, "s", "id", max_dist=1)
+    r1 = incremental_canonicalize_indexed(b1, None, "s", "id", max_dist=1)
     m1 = {r.id: (r.canonical_id, r.canonical) for r in r1.mapping.collect()}
     # first run == at-rest canonicalization
     at_rest = {
@@ -259,7 +264,7 @@ def test_incremental_canonicalize_two_rounds(spark):
         for r in canonicalize_labels(b1, "s", "id", max_dist=1).collect()
     }
     assert m1 == at_rest
-    store1 = {(r.canonical_id, r.canonical) for r in r1.store.collect()}
+    store1 = _reps(r1.store)
     assert (1, "colour") in store1 and (10, "flavour") in store1
 
     # round 2: near-re-crawls map to STORED canon; new strings elect reps
@@ -272,49 +277,76 @@ def test_incremental_canonicalize_two_rounds(spark):
         ],
         "id long, s string",
     )
-    r2 = incremental_canonicalize(b2, r1.store, "s", "id", max_dist=1)
+    r2 = incremental_canonicalize_indexed(
+        b2, r1.store, "s", "id", max_dist=1
+    )
     m2 = {r.id: (r.canonical_id, r.canonical) for r in r2.mapping.collect()}
     assert m2[100] == (1, "colour")
     assert m2[101] == (10, "flavour")
     assert m2[102] == (102, "brand new")
     assert m2[103] == (102, "brand new")
     assert len(m2) == 4
-    # delta holds ONLY the new representative; store = old ∪ delta
-    delta = {(r.canonical_id, r.canonical) for r in r2.delta.collect()}
+    # delta holds ONLY the new representative's k+1 segment rows;
+    # store = old ∪ delta
+    assert r2.delta.count() == 2
+    delta = _reps(r2.delta)
     assert delta == {(102, "brand new")}
-    store2 = {(r.canonical_id, r.canonical) for r in r2.store.collect()}
-    assert store2 == store1 | delta
+    assert _reps(r2.store) == store1 | delta
 
 
 def test_incremental_canonicalize_best_match_deterministic(spark):
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
-        incremental_canonicalize,
+        canon_segment_rows,
+        incremental_canonicalize_indexed,
     )
 
     # two stored reps both within k=2 of the probe; the closer one wins,
     # and at equal distance the lower canonical_id wins
-    store = spark.createDataFrame(
-        [(5, "abcdefgh"), (3, "abcdefxy")], "canonical_id long, canonical string"
+    store = canon_segment_rows(
+        spark.createDataFrame(
+            [(5, "abcdefgh"), (3, "abcdefxy")],
+            "canonical_id long, canonical string",
+        ),
+        max_dist=2,
     )
     batch = spark.createDataFrame(
         [(900, "abcdefg"),   # dist 1 to id5, dist 3 to id3 -> id5
          (901, "abcdefxh")], # dist 1 to id3 AND... dist 1 to id5? abcdefxh vs abcdefgh = 1 sub; vs abcdefxy = 1 sub -> tie -> id3
         "id long, s string",
     )
-    r = incremental_canonicalize(batch, store, "s", "id", max_dist=2)
+    r = incremental_canonicalize_indexed(batch, store, "s", "id", max_dist=2)
     m = {x.id: x.canonical_id for x in r.mapping.collect()}
     assert m[900] == 5
     assert m[901] == 3
 
 
-def test_incremental_canonicalize_indexed_matches_flat(spark, tmp_path):
-    """The bucketed segment-store variant is a pure re-representation:
-    same mapping, same elected representatives, across a first round
-    (no store) and a second round probing the PERSISTED bucketed store."""
+def test_flat_canon_store_refused_by_name(spark):
+    """A flat (canonical_id, canonical) store has no seg_key: the segment
+    probe refuses it with the named error."""
+    from evidence_datasource_parsers_spark.operators.fuzzy_join import (
+        incremental_canonicalize_indexed,
+    )
+    from evidence_datasource_parsers_spark.operators.store_meta import (
+        ClassicStoreError,
+    )
+
+    flat = spark.createDataFrame(
+        [(5, "abcdefgh")], "canonical_id long, canonical string"
+    )
+    batch = spark.createDataFrame([(900, "abcdefg")], "id long, s string")
+    with pytest.raises(ClassicStoreError, match="seg_key"):
+        incremental_canonicalize_indexed(batch, flat, "s", "id", max_dist=2)
+
+
+def test_incremental_canonicalize_indexed_matches_oracle(spark, tmp_path):
+    """Across a first round (no store) and later rounds probing the
+    PERSISTED bucketed segment store, the mapping equals a brute-force
+    replay: a string within k of a stored representative maps to the
+    nearest one (ties → min id); the rest canonicalize at rest."""
     import uuid
 
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
-        incremental_canonicalize,
+        canonicalize_labels,
         incremental_canonicalize_indexed,
     )
     from evidence_datasource_parsers_spark.sources.sinks import (
@@ -334,17 +366,34 @@ def test_incremental_canonicalize_indexed_matches_flat(spark, tmp_path):
         "id long, s string",
     )
 
-    flat1 = incremental_canonicalize(b1, None, "s", "id", max_dist=k)
-    flat2 = incremental_canonicalize(b2, flat1.store, "s", "id", max_dist=k)
+    def oracle(batch, reps):
+        """Brute-force store-priority mapping over collected strings."""
+        out, rest = {}, []
+        for r in batch.collect():
+            near = sorted(
+                (ed(r.s, rep), cid, rep) for cid, rep in reps
+                if ed(r.s, rep) <= k
+            )
+            if near:
+                out[r.id] = near[0][1:]
+            else:
+                rest.append((r.id, r.s))
+        if rest:
+            at_rest = canonicalize_labels(
+                spark.createDataFrame(rest, "id long, s string"),
+                "s", "id", max_dist=k,
+            )
+            out.update(
+                {r.id: (r.canonical_id, r.canonical)
+                 for r in at_rest.collect()}
+            )
+        return out
 
     table = f"canon_{uuid.uuid4().hex[:8]}"
     try:
         idx1 = incremental_canonicalize_indexed(b1, None, "s", "id", max_dist=k)
         assert {r.id: (r.canonical_id, r.canonical)
-                for r in idx1.mapping.collect()} == {
-            r.id: (r.canonical_id, r.canonical)
-            for r in flat1.mapping.collect()
-        }
+                for r in idx1.mapping.collect()} == oracle(b1, [])
         write_bucketed_store(
             idx1.delta, str(tmp_path / "canon"), table, ["seg_key"], 8
         )
@@ -354,11 +403,9 @@ def test_incremental_canonicalize_indexed_matches_flat(spark, tmp_path):
         idx2 = incremental_canonicalize_indexed(
             b2, st1, "s", "id", max_dist=k
         )
+        reps1 = _reps(st1)
         assert {r.id: (r.canonical_id, r.canonical)
-                for r in idx2.mapping.collect()} == {
-            r.id: (r.canonical_id, r.canonical)
-            for r in flat2.mapping.collect()
-        }
+                for r in idx2.mapping.collect()} == oracle(b2, reps1)
         # delta = (k+1) segment rows per new representative
         delta_rows = idx2.delta.collect()
         assert {(r.canonical_id, r.canonical) for r in delta_rows} == {
@@ -376,6 +423,10 @@ def test_incremental_canonicalize_indexed_matches_flat(spark, tmp_path):
         )
         m3 = {r.id: r.canonical_id for r in idx3.mapping.collect()}
         assert m3 == {200: 1, 201: 102}
+        assert {
+            r.id: (r.canonical_id, r.canonical)
+            for r in idx3.mapping.collect()
+        } == oracle(b3, reps1 | {(102, "brand new")})
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -435,7 +486,7 @@ def test_property_incremental_drift_bound(spark_prop, strs, k):
     stored rep must get ONE canonical label from the incremental pass."""
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
         canonicalize_labels,
-        incremental_canonicalize,
+        incremental_canonicalize_indexed,
     )
 
     half = max(1, len(strs) // 2)
@@ -443,18 +494,20 @@ def test_property_incremental_drift_bound(spark_prop, strs, k):
     if not batch_strs:
         return
     # store = representatives elected from the first half (round 1)
-    r1 = incremental_canonicalize(
+    r1 = incremental_canonicalize_indexed(
         spark_prop.createDataFrame(
             list(enumerate(store_strs)), "id long, s string"
         ),
         None, "s", "id", max_dist=k,
     )
-    store_reps = [(r.canonical_id, r.canonical) for r in r1.store.collect()]
+    store_reps = sorted(_reps(r1.store))
     batch = spark_prop.createDataFrame(
         [(1000 + i, s) for i, s in enumerate(batch_strs)],
         "id long, s string",
     )
-    r2 = incremental_canonicalize(batch, r1.store, "s", "id", max_dist=k)
+    r2 = incremental_canonicalize_indexed(
+        batch, r1.store, "s", "id", max_dist=k
+    )
     inc = {r.id: r.canonical_id for r in r2.mapping.collect()}
 
     # at-rest ground truth over store reps ∪ batch
@@ -500,17 +553,21 @@ def test_incremental_drift_seeded_counterexample(spark):
     elects a new representative — a SPLIT, and a legal one because the
     pair straddles the stored rep's neighborhood."""
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
+        canon_segment_rows,
         canonicalize_labels,
-        incremental_canonicalize,
+        incremental_canonicalize_indexed,
     )
 
-    store = spark.createDataFrame(
-        [(1, "aaaa")], "canonical_id long, canonical string"
+    store = canon_segment_rows(
+        spark.createDataFrame(
+            [(1, "aaaa")], "canonical_id long, canonical string"
+        ),
+        max_dist=1,
     )
     batch = spark.createDataFrame(
         [(100, "aaab"), (101, "aabb")], "id long, s string"
     )
-    r = incremental_canonicalize(batch, store, "s", "id", max_dist=1)
+    r = incremental_canonicalize_indexed(batch, store, "s", "id", max_dist=1)
     m = {x.id: x.canonical_id for x in r.mapping.collect()}
     assert m == {100: 1, 101: 101}  # the split
     at_rest = canonicalize_labels(

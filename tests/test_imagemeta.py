@@ -97,6 +97,6 @@ def test_image_stats_and_gates_on_container_dims(spark):
     # garbage has NULL dims and passes ungated (undecodable contract)
     assert ready == {1, 3, 4}
     # only the decodable PPM contributed a pHash to the store
-    assert [x.media_id for x in r.store.select("media_id").collect()] \
-        == [3]
+    assert {x.media_id for x in r.store.select("media_id").collect()} \
+        == {3}
     r.done()

@@ -301,17 +301,18 @@ def test_incremental_phash_dedupe_two_runs(spark):
     """The perceptual store across two refresh runs: run 1 seeds the store;
     run 2's re-encoded copy of a stored photo drops, its genuinely new
     photo survives, its undecodable blob passes through unstored, and the
-    store grows by exactly the survivors with hashes."""
+    store grows by exactly the survivors with hashes (C(9,3)=84 key-index
+    rows each)."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
+        incremental_phash_dedupe_indexed,
     )
 
     photo, other = _photo(), _other_photo()
     run1 = spark.createDataFrame(
         [(1, encode_jpeg(photo, quality=95))], "media_id long, blob binary"
     )
-    r1 = incremental_phash_dedupe(run1, None)
-    assert r1.fresh.count() == 1 and r1.store.count() == 1
+    r1 = incremental_phash_dedupe_indexed(run1, None)
+    assert r1.fresh.count() == 1 and r1.store.count() == 84
     store = r1.store.localCheckpoint(eager=True)
     r1.pinned.unpersist()
 
@@ -325,7 +326,7 @@ def test_incremental_phash_dedupe_two_runs(spark):
         ],
         "media_id long, blob binary",
     )
-    r2 = incremental_phash_dedupe(run2, store)
+    r2 = incremental_phash_dedupe_indexed(run2, store)
     fresh_ids = {r["media_id"] for r in r2.fresh.collect()}
     # 10 drops against the store; 11 survives; 13 passes through; 12 is
     # within-batch near-dup scope — kept UNLESS its pHash exactly equals
@@ -342,14 +343,14 @@ def test_incremental_phash_within_batch_exact_collapse(spark):
     """Bit-identical blobs in ONE batch collapse to the min id before the
     store join."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
+        incremental_phash_dedupe_indexed,
     )
 
     blob = encode_jpeg(_photo(), quality=95)
     batch = spark.createDataFrame(
         [(5, blob), (2, blob), (9, blob)], "media_id long, blob binary"
     )
-    r = incremental_phash_dedupe(batch, None)
+    r = incremental_phash_dedupe_indexed(batch, None)
     assert {x["media_id"] for x in r.fresh.collect()} == {2}
     r.pinned.unpersist()
 
@@ -373,13 +374,17 @@ def test_image_phash_frame_string_ids(spark):
     assert fp["http://a/y.jpg"] is None
 
 
-def test_indexed_perceptual_dedupe_equals_classic(spark):
-    """The hamming key-index store form must be batch-for-batch
-    indistinguishable from the classic perceptual core — synthetic
-    fingerprint frames (via batch_phashes) cover NULL hashes, exact
-    twins, near-dups, and out-of-range pairs without any decoding."""
+def test_indexed_perceptual_dedupe_matches_min_hamming_oracle(spark):
+    """The pHash key-index operator drops, batch for batch, exactly what
+    a brute-force min-hamming replay over the fingerprints drops —
+    synthetic fingerprint frames (via batch_phashes) cover NULL hashes,
+    exact twins, near-dups, and out-of-range pairs without any
+    decoding — and stores C(9,3)=84 index rows per kept image."""
+    from math import comb
+
+    from hamming_oracle import replay_hamming_dedupe
+
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
         incremental_phash_dedupe_indexed,
     )
 
@@ -392,76 +397,53 @@ def test_indexed_perceptual_dedupe_equals_classic(spark):
         [(20, base ^ 0b101),          # replay of 10's hash → drop
          (21, (base ^ 0x3F3F3F3F) ^ (1 << 20))],  # hamming 1 of 11 → drop
     ]
-    classic_store = None
-    indexed_store = None
-    for rows in batches:
-        fp = spark.createDataFrame(rows, "media_id long, phash long")
-        batch = fp.select("media_id")
-        rc = incremental_phash_dedupe(
-            batch, classic_store, id_col="media_id", batch_phashes=fp
-        )
-        ri = incremental_phash_dedupe_indexed(
-            batch, indexed_store, id_col="media_id", batch_phashes=fp
-        )
-        assert (
-            {r.media_id for r in rc.fresh.collect()}
-            == {r.media_id for r in ri.fresh.collect()}
-        ), rows
-        classic_store = rc.store.localCheckpoint(eager=True)
-        indexed_store = ri.store.localCheckpoint(eager=True)
-        rc.pinned.unpersist()
-        ri.pinned.unpersist()
-    # C(9, 3) = 84 combos per stored hash at the phash defaults (d=6 →
-    # keep 3 of 9 blocks)
-    from math import comb
-
-    assert indexed_store.count() == classic_store.count() * comb(9, 3)
-    assert (
-        {r.media_id for r in indexed_store.select("media_id").distinct().collect()}
-        == {r.media_id for r in classic_store.select("media_id").collect()}
+    expected = replay_hamming_dedupe(
+        [[(i, fp, fp) for i, fp in rows] for rows in batches], max_hamming=6
     )
+    assert [e[0] for e in expected] == [{1, 2, 3}, {11, 12}, set()]
+    store, kept_all = None, set()
+    for rows, (fresh_ids, kept_ids) in zip(batches, expected):
+        fp = spark.createDataFrame(rows, "media_id long, phash long")
+        res = incremental_phash_dedupe_indexed(
+            fp.select("media_id"), store, id_col="media_id",
+            batch_phashes=fp,
+        )
+        assert {r.media_id for r in res.fresh.collect()} == fresh_ids, rows
+        store = res.store.localCheckpoint(eager=True)
+        res.pinned.unpersist()
+        kept_all |= kept_ids
+    assert store.count() == len(kept_all) * comb(9, 3)
+    assert {
+        r.media_id for r in store.select("media_id").distinct().collect()
+    } == kept_all
 
 
-def test_indexed_remux_dedupe_equals_classic(spark):
-    """remux (max_hamming=0, n_blocks=1): the index is one row per clip —
-    same drop decisions, same cardinality, uniform store format."""
+def test_indexed_remux_dedupe_matches_oracle(spark):
+    """remux (max_hamming=0, n_blocks=1): the index is one row per clip
+    and the drop rule is exact stream-hash equality — the oracle replay
+    at hamming 0."""
+    from hamming_oracle import replay_hamming_dedupe
+
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_remux_dedupe,
         incremental_remux_dedupe_indexed,
     )
 
-    b1 = spark.createDataFrame(
-        [(1, 111), (2, 222), (3, None)], "media_id long, stream_hash long"
+    batches = [[(1, 111), (2, 222), (3, None)], [(10, 111), (11, 333)]]
+    expected = replay_hamming_dedupe(
+        [[(i, h, h) for i, h in rows] for rows in batches], max_hamming=0
     )
-    b2 = spark.createDataFrame(
-        [(10, 111), (11, 333)], "media_id long, stream_hash long"
-    )
-    rc1 = incremental_remux_dedupe(
-        b1.select("media_id"), None, id_col="media_id",
-        batch_stream_hashes=b1,
-    )
-    ri1 = incremental_remux_dedupe_indexed(
-        b1.select("media_id"), None, id_col="media_id",
-        batch_stream_hashes=b1,
-    )
-    cs = rc1.store.localCheckpoint(eager=True)
-    is_ = ri1.store.localCheckpoint(eager=True)
-    rc1.pinned.unpersist(); ri1.pinned.unpersist()
-    assert is_.count() == cs.count() == 2  # one index row per clip
-    rc2 = incremental_remux_dedupe(
-        b2.select("media_id"), cs, id_col="media_id",
-        batch_stream_hashes=b2,
-    )
-    ri2 = incremental_remux_dedupe_indexed(
-        b2.select("media_id"), is_, id_col="media_id",
-        batch_stream_hashes=b2,
-    )
-    assert (
-        {r.media_id for r in rc2.fresh.collect()}
-        == {r.media_id for r in ri2.fresh.collect()}
-        == {11}
-    )
-    rc2.pinned.unpersist(); ri2.pinned.unpersist()
+    assert [e[0] for e in expected] == [{1, 2, 3}, {11}]
+    store = None
+    for rows, (fresh_ids, _kept) in zip(batches, expected):
+        b = spark.createDataFrame(rows, "media_id long, stream_hash long")
+        res = incremental_remux_dedupe_indexed(
+            b.select("media_id"), store, id_col="media_id",
+            batch_stream_hashes=b,
+        )
+        assert {r.media_id for r in res.fresh.collect()} == fresh_ids
+        store = res.store.localCheckpoint(eager=True)
+        res.pinned.unpersist()
+    assert store.count() == 3  # one index row per stored clip: 1, 2, 11
 
 
 def test_phash_sink_bucketed_store_table(spark, tmp_path):

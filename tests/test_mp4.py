@@ -1,6 +1,6 @@
 """ISO-BMFF (MP4) container walk: parser/writer roundtrip, sample-range
 resolution, remux-invariant stream hashing, and the video-tier
-integration (video_meta_frame / incremental_remux_dedupe)."""
+integration (video_meta_frame / incremental_remux_dedupe_indexed)."""
 
 from __future__ import annotations
 
@@ -133,7 +133,7 @@ def test_stream_hash_and_remux_dedupe(spark):
     containers collapses to one clip; a genuinely different stream and an
     unrecognized blob both survive (NULL hash unstored)."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_remux_dedupe,
+        incremental_remux_dedupe_indexed,
         video_stream_hash_frame,
     )
 
@@ -151,7 +151,7 @@ def test_stream_hash_and_remux_dedupe(spark):
     assert hashes[1].container == "mp4" and hashes[1].codec == "avc1"
     assert hashes[1].stream_hash != hashes[2].stream_hash
 
-    r1 = incremental_remux_dedupe(b1, None)
+    r1 = incremental_remux_dedupe_indexed(b1, None)
     assert r1.fresh.count() == 2
     store = r1.store.localCheckpoint(eager=True)
     r1.pinned.unpersist()
@@ -162,7 +162,7 @@ def test_stream_hash_and_remux_dedupe(spark):
          (12, bytearray(encode_mp4([b"\x77" * 40] * 2, 32, 32)))],
         "media_id long, blob binary",
     )
-    r2 = incremental_remux_dedupe(b2, store)
+    r2 = incremental_remux_dedupe_indexed(b2, store)
     assert {r.media_id for r in r2.fresh.select("media_id").collect()} \
         == {11, 12}
     new_store = r2.store.localCheckpoint(eager=True)

@@ -4,12 +4,13 @@ CORRECTNESS gate runs (full sweep lives in tools/verify_local.py)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.verify_local import TABLES, canon_pandas, canon_rows
 

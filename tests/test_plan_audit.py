@@ -3,11 +3,12 @@ shapes (1-row scalar broadcast, top-k, Arrow stages) must not."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tools.plan_audit import audit_plan  # noqa: E402
 
 

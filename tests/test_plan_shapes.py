@@ -416,17 +416,21 @@ def test_simhash_pigeonhole_join_is_equi_join(spark, sf_dir):
     family ("hamming distance <= d") is not itself an equi-condition: the
     Manku block-combination tables reduce it to one."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        incremental_simhash_dedupe,
+        hamming_key_index,
+        incremental_simhash_dedupe_indexed,
         simhash_fingerprints,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    store = simhash_fingerprints(
-        docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
+    store = hamming_key_index(
+        simhash_fingerprints(
+            docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
+        ),
+        "doc_id", "simhash", 32, 3, 6,
     )
-    res = incremental_simhash_dedupe(
+    res = incremental_simhash_dedupe_indexed(
         docs.filter(F.col("doc_id") % 2 == 1), store, "text", "doc_id"
     )
     try:
@@ -455,11 +459,14 @@ def test_perceptual_pair_ops_never_cartesian(spark):
     """Every round-6 pair/dedup operator must stay on combo-key equi-joins:
     no CartesianProduct and no non-broadcast nested loop anywhere in the
     audio pair search, video pair search, or the three perceptual
-    incremental stores."""
+    incremental stores (pHash and audio over their key-index stores)."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
+    )
     from evidence_datasource_parsers_spark.operators.multimodal import (
         audio_near_dup_pairs,
-        incremental_audio_dedupe,
-        incremental_phash_dedupe,
+        incremental_audio_dedupe_indexed,
+        incremental_phash_dedupe_indexed,
         incremental_video_dedupe,
         video_near_dup_pairs,
     )
@@ -467,11 +474,13 @@ def test_perceptual_pair_ops_never_cartesian(spark):
     batch = spark.createDataFrame(
         [(1, bytes(64)), (2, bytes(64))], "media_id long, blob binary"
     )
-    phash_store = spark.createDataFrame(
-        [(9, 12345)], "media_id long, phash long"
+    phash_store = hamming_key_index(
+        spark.createDataFrame([(9, 12345)], "media_id long, phash long"),
+        "media_id", "phash", 63, 6, 9,
     )
-    afp_store = spark.createDataFrame(
-        [(9, 12345)], "media_id long, afp long"
+    afp_store = hamming_key_index(
+        spark.createDataFrame([(9, 12345)], "media_id long, afp long"),
+        "media_id", "afp", 63, 8, 10,
     )
     frame_store = spark.createDataFrame(
         [(9, 0, 12345)], "media_id long, frame_idx int, phash long"
@@ -480,10 +489,10 @@ def test_perceptual_pair_ops_never_cartesian(spark):
         "audio_pairs": _df_plan(audio_near_dup_pairs(batch)),
         "video_pairs": _df_plan(video_near_dup_pairs(batch)),
         "incr_phash": _df_plan(
-            incremental_phash_dedupe(batch, phash_store).fresh
+            incremental_phash_dedupe_indexed(batch, phash_store).fresh
         ),
         "incr_audio": _df_plan(
-            incremental_audio_dedupe(batch, afp_store).fresh
+            incremental_audio_dedupe_indexed(batch, afp_store).fresh
         ),
         "incr_video": _df_plan(
             incremental_video_dedupe(batch, frame_store).fresh
@@ -565,15 +574,14 @@ def test_sink_bucketed_store_read_never_shuffles(spark, tmp_path):
 def test_simhash_key_index_store_never_shuffles(spark, sf_dir, tmp_path):
     """The simhash KEY-INDEX store bucketed on (combo, key): a batch
     probe's candidate join reads the store in place — no store-side
-    Exchange AND no store-side Generate (the classic form's per-batch
-    O(store × combos) explode is gone from the plan); the batch side
-    owns the one Exchange, re-clustering its exploded keys into the
-    store's buckets."""
+    Exchange AND no store-side Generate (no per-batch O(store × combos)
+    explode); the batch side owns the one Exchange, re-clustering its
+    exploded keys into the store's buckets."""
     import uuid
 
     from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
         simhash_fingerprints,
-        simhash_key_index,
     )
     from evidence_datasource_parsers_spark.sources.sinks import (
         read_bucketed_store,
@@ -588,7 +596,7 @@ def test_simhash_key_index_store_never_shuffles(spark, sf_dir, tmp_path):
             docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
         )
         write_bucketed_store(
-            simhash_key_index(store_fp, "doc_id", 32, 3, 6),
+            hamming_key_index(store_fp, "doc_id", "simhash", 32, 3, 6),
             str(tmp_path / "shidx"), table, ["combo", "key"], 8,
         )
         st = read_bucketed_store(spark, table)

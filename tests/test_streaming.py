@@ -572,7 +572,9 @@ def test_incremental_dedupe_sink_phash_mode(spark, tmp_path):
          (11, encode_jpeg(other, quality=95))],
         expect=[1, 11],
     )
-    assert sorted(st.columns) == ["media_id", "phash"] and st.count() == 2
+    # the key-index store: C(9,3) = 84 (combo, key) rows per kept image
+    assert sorted(st.columns) == ["combo", "key", "media_id", "phash"]
+    assert st.count() == 2 * 84
 
 
 def test_incremental_dedupe_sink_audio_mode(spark, tmp_path):
@@ -607,7 +609,9 @@ def test_incremental_dedupe_sink_audio_mode(spark, tmp_path):
          (11, wav(tone(8000, other), 8000))],
         expect=[1, 11],
     )
-    assert sorted(st.columns) == ["afp", "media_id"] and st.count() == 2
+    # the key-index store: C(10,2) = 45 (combo, key) rows per kept clip
+    assert sorted(st.columns) == ["afp", "combo", "key", "media_id"]
+    assert st.count() == 2 * 45
 
 
 def test_incremental_dedupe_sink_span_mode(spark, tmp_path):

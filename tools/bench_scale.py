@@ -273,30 +273,23 @@ def incremental_refresh_case(spark, base: str, out_dir: str, materialize):
 
 
 def incremental_simhash_index_case(spark, base, out_dir, materialize):
-    """SimHash twin of the incremental-refresh case, measuring the
-    round-12 KEY-INDEX store against the classic form it replaces: a
-    FIXED batch (the base corpus's odd doc_ids) probed against a store
-    of even doc_ids at base vs scaled size.
+    """SimHash twin of the incremental-refresh case over the KEY-INDEX
+    store: a FIXED batch (the base corpus's odd doc_ids) probed against
+    a store of even doc_ids at base vs scaled size.
 
-    * ``base/scaled`` — the INDEXED probe (pre-exploded (combo, key)
-      rows carried as a bucketed table, read in place): must stay ~flat.
+    * ``base/scaled`` — the probe (pre-exploded (combo, key) rows carried
+      as a bucketed table, read in place): must stay ~flat.
     * ``advance_*`` — appending the batch's exploded delta into the
       bucketed table: O(batch · combos), flat by construction.
 
-    A classic-vs-indexed probe A/B was measured and REMOVED: at sf0.1
-    both store forms sit under the broadcast threshold, so the
-    difference is noise (one sample showed the classic probe 4× FASTER
-    against a 10× larger store — impossible, pure measurement floor).
-    The classic form's extra cost is structural — a per-batch
-    O(store × combos) Generate over the store side — and is pinned
-    scale-independently by the plan assertion in
-    tests/test_plan_shapes.py::test_simhash_key_index_store_never_shuffles
-    (zero store-side Exchange AND zero store-side Generate).
+    The store side carries zero Exchange and zero Generate per probe,
+    pinned scale-independently by the plan assertion in
+    tests/test_plan_shapes.py::test_simhash_key_index_store_never_shuffles.
     """
     from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
         incremental_simhash_dedupe_indexed,
         simhash_fingerprints,
-        simhash_key_index,
     )
     from evidence_datasource_parsers_spark.plans.catalog import load
     from evidence_datasource_parsers_spark.sources.sinks import (
@@ -313,21 +306,21 @@ def incremental_simhash_index_case(spark, base, out_dir, materialize):
     # costs ~2-3s and is store-INDEPENDENT — timed inline it drowns the
     # store-coupled work this case exists to measure (observed: base
     # label reading SLOWER than scaled on identical code, pure noise).
-    # Both operators take precomputed batch_fingerprints for exactly this
+    # The operator takes precomputed batch_fingerprints for exactly this
     # single-scan reuse, so the timed runs measure survivor collapse +
     # candidate join + anti-join — the part that touches the store.
     bfp = simhash_fingerprints(batch, "text", "doc_id").localCheckpoint(
         eager=True
     )
-    # untimed warm-up of BOTH operators' plan shapes: unlike the LSH case
+    # untimed warm-up of the operator's plan shape: unlike the LSH case
     # (warmed by q34 in the catalog loop), no bench query exercises the
-    # simhash paths, and the base label is always measured first
+    # simhash path, and the base label is always measured first
     tiny = load(spark, "/root/testdata/sf0.001", "documents")
     wfp = simhash_fingerprints(
         tiny.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
     )
     warm = incremental_simhash_dedupe_indexed(
-        tiny, simhash_key_index(wfp, "doc_id", 32, 3, 6),
+        tiny, hamming_key_index(wfp, "doc_id", "simhash", 32, 3, 6),
         "text", "doc_id",
     )
     materialize(warm.fresh)
@@ -348,7 +341,7 @@ def incremental_simhash_index_case(spark, base, out_dir, materialize):
                 "text", "doc_id",
             )
             write_bucketed_store(
-                simhash_key_index(store_fp, "doc_id", 32, 3, 6),
+                hamming_key_index(store_fp, "doc_id", "simhash", 32, 3, 6),
                 idx_path, table, ["combo", "key"], 32,
             )
             def one_probe():
@@ -454,24 +447,29 @@ def incremental_span_case(spark, base, out_dir, materialize):
 
 def incremental_phash_case(spark, materialize, replicas: int):
     """Media twin of the incremental-refresh case: a FIXED batch of image
-    fingerprints deduped against a pHash store at base vs ``replicas``×
-    size.  The store is synthesized directly — (media_id, phash) longs ARE
-    the carried state; decode cost is per-image and scale-invariant, so
-    what must stay flat as the image corpus grows is the combo-key
-    candidate join against the store.  ~5% of the batch is seeded as
-    2-bit-flipped near-dups of store hashes so the drop path executes."""
+    fingerprints deduped against a pHash key-index store at base vs
+    ``replicas``× size.  The store is synthesized directly — (media_id,
+    phash) longs exploded into their (combo, key) rows ARE the carried
+    state; decode cost is per-image and scale-invariant, so what must
+    stay flat as the image corpus grows is the combo-key candidate join
+    against the store.  ~5% of the batch is seeded as 2-bit-flipped
+    near-dups of store hashes so the drop path executes."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
+    )
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
+        incremental_phash_dedupe_indexed,
     )
 
     base_n, batch_n = 20_000, 2_000
     mask63 = F.lit((1 << 63) - 1)
 
     def mk_store(n: int):
-        return spark.range(n).select(
+        fp = spark.range(n).select(
             F.col("id").alias("media_id"),
             F.xxhash64(F.col("id")).bitwiseAND(mask63).alias("phash"),
         )
+        return hamming_key_index(fp, "media_id", "phash", 63, 6, 9)
 
     batch_fp = spark.range(batch_n).select(
         (F.col("id") + F.lit(10**9)).alias("media_id"),
@@ -495,14 +493,14 @@ def incremental_phash_case(spark, materialize, replicas: int):
             store = mk_store(n).localCheckpoint(eager=True)  # build untimed
 
             def one_probe():
-                res = incremental_phash_dedupe(
+                res = incremental_phash_dedupe_indexed(
                     batch, store, batch_phashes=batch_fp
                 )
                 materialize(res.fresh)
                 res.pinned.unpersist()
 
             probe_median(spark, one_probe, row, label)
-            res = incremental_phash_dedupe(
+            res = incremental_phash_dedupe_indexed(
                 batch, store, batch_phashes=batch_fp
             )
             time_delta_advance(res.delta, store, label, row, "phash")
@@ -700,24 +698,28 @@ def frontier_table_case(spark, materialize, replicas: int):
 
 def incremental_remux_case(spark, materialize, replicas: int):
     """Round-8 elementary-stream tier: a FIXED batch of clip stream
-    hashes deduped against a (media_id, stream_hash) store at base vs
+    hashes deduped against a stream-hash key-index store at base vs
     ``replicas``× size.  The container walk + md5 are per-clip and
     scale-invariant, so the store is synthesized directly; what must
     stay flat as the clip corpus grows is the single exact equi-join
     (the fingerprint core at max_hamming=0: ONE combo key = the full
     hash).  ~5% of the batch is seeded as exact re-uploads of store
     hashes so the drop path executes."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
+    )
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_remux_dedupe,
+        incremental_remux_dedupe_indexed,
     )
 
     base_n, batch_n = 20_000, 2_000
 
     def mk_store(n: int):
-        return spark.range(n).select(
+        fp = spark.range(n).select(
             F.col("id").alias("media_id"),
             F.xxhash64(F.col("id")).alias("stream_hash"),
         )
+        return hamming_key_index(fp, "media_id", "stream_hash", 63, 0, 1)
 
     batch_fp = spark.range(batch_n).select(
         (F.col("id") + F.lit(10**9)).alias("media_id"),
@@ -737,14 +739,14 @@ def incremental_remux_case(spark, materialize, replicas: int):
             store = mk_store(n).localCheckpoint(eager=True)  # build untimed
 
             def one_probe():
-                res = incremental_remux_dedupe(
+                res = incremental_remux_dedupe_indexed(
                     batch, store, batch_stream_hashes=batch_fp
                 )
                 materialize(res.fresh)
                 res.pinned.unpersist()
 
             probe_median(spark, one_probe, row, label)
-            res = incremental_remux_dedupe(
+            res = incremental_remux_dedupe_indexed(
                 batch, store, batch_stream_hashes=batch_fp
             )
             time_delta_advance(res.delta, store, label, row, "remux")

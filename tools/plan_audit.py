@@ -26,9 +26,10 @@ cheap version of the per-operator .explain review SCALE.md documents.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 #: Queries whose flagged shape is a DOCUMENTED contract, not a bug.
@@ -162,12 +163,13 @@ def pipeline_plans(spark) -> dict:
         train_langid_classifier,
     )
     from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_key_index,
         incremental_lsh_dedupe,
         lsh_fingerprints,
     )
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
-        incremental_remux_dedupe,
+        incremental_phash_dedupe_indexed,
+        incremental_remux_dedupe_indexed,
     )
     from evidence_datasource_parsers_spark.operators.similarity import (
         incremental_embedding_dedupe,
@@ -253,11 +255,14 @@ def pipeline_plans(spark) -> dict:
         F.col("id").alias("media_id"),
         F.xxhash64("id").bitwiseAND(F.lit((1 << 63) - 1)).alias("phash"),
     )
-    phash_store = spark.range(4, 8).select(
-        F.col("id").alias("media_id"),
-        F.xxhash64("id").bitwiseAND(F.lit((1 << 63) - 1)).alias("phash"),
+    phash_store = hamming_key_index(
+        spark.range(4, 8).select(
+            F.col("id").alias("media_id"),
+            F.xxhash64("id").bitwiseAND(F.lit((1 << 63) - 1)).alias("phash"),
+        ),
+        "media_id", "phash", 63, 6, 9,
     )
-    pres = incremental_phash_dedupe(
+    pres = incremental_phash_dedupe_indexed(
         media, phash_store, batch_phashes=phashes
     )
     plans["incremental_phash_fresh"] = pres.fresh
@@ -266,10 +271,14 @@ def pipeline_plans(spark) -> dict:
     shashes = spark.range(4).select(
         F.col("id").alias("media_id"), F.xxhash64("id").alias("stream_hash")
     )
-    shash_store = spark.range(4, 8).select(
-        F.col("id").alias("media_id"), F.xxhash64("id").alias("stream_hash")
+    shash_store = hamming_key_index(
+        spark.range(4, 8).select(
+            F.col("id").alias("media_id"),
+            F.xxhash64("id").alias("stream_hash"),
+        ),
+        "media_id", "stream_hash", 63, 0, 1,
     )
-    rres = incremental_remux_dedupe(
+    rres = incremental_remux_dedupe_indexed(
         media, shash_store, batch_stream_hashes=shashes
     )
     plans["incremental_remux_fresh"] = rres.fresh
@@ -360,28 +369,20 @@ def pipeline_plans(spark) -> dict:
     )
     plans["fuzzy_self_join"] = edit_distance_self_join(titles, "s", "id", 2)
 
-    # incremental canonicalization: store-match leg (mapping) and the
-    # append-only delta — both must stay equi-join shapes
-    from evidence_datasource_parsers_spark.operators.fuzzy_join import (
-        incremental_canonicalize,
-    )
-
-    canon = spark.createDataFrame(
-        [(0, "title number 0")], "canonical_id long, canonical string"
-    )
-    inc = incremental_canonicalize(titles, canon, "s", "id", 2)
-    plans["fuzzy_incremental_mapping"] = inc.mapping
-    plans["fuzzy_incremental_delta"] = inc.delta
-
-    # the at-scale store form: probe against the persisted segment index
-    # (in-memory stand-in here — the zero-Exchange bucketed claim is the
-    # plan-shape test's job; the auditor checks no cartesian / no UDF /
-    # no hot-path collect in the candidate join + mapping + delta)
+    # incremental canonicalization against the persisted segment index:
+    # store-match leg (mapping) and the append-only delta — both must stay
+    # equi-join shapes (in-memory stand-in here — the zero-Exchange
+    # bucketed claim is the plan-shape test's job; the auditor checks no
+    # cartesian / no UDF / no hot-path collect in the candidate join +
+    # mapping + delta)
     from evidence_datasource_parsers_spark.operators.fuzzy_join import (
         canon_segment_rows,
         incremental_canonicalize_indexed,
     )
 
+    canon = spark.createDataFrame(
+        [(0, "title number 0")], "canonical_id long, canonical string"
+    )
     seg = canon_segment_rows(canon, 2)
     idx = incremental_canonicalize_indexed(titles, seg, "s", "id", 2)
     plans["fuzzy_indexed_mapping"] = idx.mapping

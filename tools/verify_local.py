@@ -25,9 +25,10 @@ cannot sort those (round-1 failure mode for q18/q19).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from evidence_datasource_parsers_spark.forensics import (  # noqa: E402
     TABLES,
