@@ -215,6 +215,10 @@ def fingerprint_documents(
 
         return s.map(one)
 
+    # pure, but flagged nondeterministic so Catalyst cannot clone it into
+    # the size(out_col) > 0 filter it infers for a downstream explode —
+    # the clone runs the whole corpus pass twice
     return df.select(
-        F.col(id_col), _kernel(F.col(text_col)).alias(out_col)
+        F.col(id_col),
+        _kernel.asNondeterministic()(F.col(text_col)).alias(out_col),
     )

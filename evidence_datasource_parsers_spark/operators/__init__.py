@@ -57,7 +57,7 @@ from evidence_datasource_parsers_spark.operators.sampling import (  # noqa: F401
     temporal_split,
 )
 from evidence_datasource_parsers_spark.operators.similarity import (  # noqa: F401
-    ann_lsh_topk,
+    ann_lsh_topk_dual,
     brute_force_topk,
     hyperplane_bucket_rows,
     incremental_embedding_dedupe,

@@ -237,31 +237,10 @@ def minhash_signatures_exploded(
     )
 
 
-def minhash_bands(sig_col: Column, num_perm: int, bands: int) -> Column:
-    """Split a signature into LSH bands: array<struct<band:int, key:string>>."""
-    rows_per_band = num_perm // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.element_at(sig_col, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_bands_sql(sig_name: str, num_perm: int, bands: int) -> str:
-    """SQL-string twin of :func:`minhash_bands` over a column NAME — one
-    py4j round trip instead of one per node (r13 driver-time shave; the
-    parsed tree is identical: named_struct IS what aliased F.struct
-    compiles to)."""
+    """Split a signature column NAME into LSH bands:
+    ``array<struct<band:int, key:string>>``, built as one SQL string — one
+    py4j round trip instead of one per expression node (r13)."""
     rows_per_band = num_perm // bands
     structs = []
     for b in range(bands):
@@ -286,30 +265,21 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: (id_a, id_b) sharing >= 1 band bucket.
 
-    Plan shape: exploded-aggregate signature (cached) → band keys → equi-join
-    of bucket rows on (band, key) → distinct pairs.  The shuffle key is the
-    band bucket — small and bounded by the banding threshold; no O(n²)
-    comparisons outside buckets.
+    Plan shape: exploded-aggregate signature → band keys → bucket rows
+    grouped on (band, key) and expanded locally
+    (:func:`lsh_candidate_pairs_from_buckets`) → distinct pairs.  The
+    shuffle key is the band bucket — small and bounded by the banding
+    threshold; no O(n²) comparisons outside buckets.
     """
-    # Materialize the signature behind projection boundaries BEFORE building
-    # band keys: each band key references the signature array 'rows_per_band'
-    # times, and inlining would re-evaluate the md5-per-shingle pipeline per
-    # reference (CollapseProject keeps the boundary: expensive + multi-ref).
-    # PERSIST the signature: the band-key projection references __sig
-    # rows_per_band times per band and CollapseProject can inline the whole
-    # md5 pipeline per reference; caching pins the boundary.  The self-join
-    # also consumes the lineage twice.  At scale the signature frame is
-    # id + num_perm longs per doc — tiny relative to the corpus.
+    # the band explosion is post-aggregate (as in lsh_fingerprints), so the
+    # md5-per-shingle work below the signature aggregate runs once
     sig = minhash_signatures_exploded(
         df, id_col, text_col, "__sig", num_perm, k, mode
-    ).persist()
-    banded = sig.select(
-        id_col,
-        minhash_bands(F.col("__sig"), num_perm, bands).alias("__bands"),
     )
-    buckets = banded.select(
-        id_col, F.explode("__bands").alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.key").alias("key"))
+    buckets = sig.selectExpr(
+        f"`{id_col}`",
+        f"explode({minhash_bands_sql('__sig', num_perm, bands)}) AS __b",
+    ).selectExpr(f"`{id_col}`", "__b.band AS band", "__b.key AS key")
     return lsh_candidate_pairs_from_buckets(buckets, id_col)
 
 

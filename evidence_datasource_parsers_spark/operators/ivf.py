@@ -16,7 +16,7 @@ search join is shuffle-free on the corpus side.
 
 The cell assignment is an Arrow-batched pandas UDF, not an unrolled SQL
 expression, for the same two reasons the ANN-LSH bucketing is
-(similarity.ann_lsh_topk): n_cells literal-laden dim-term trees (a) compile
+(operators/similarity.py): n_cells literal-laden dim-term trees (a) compile
 to generated methods past HotSpot's 8 KB JIT ceiling, so they execute in the
 JVM's bytecode interpreter, and (b) serialize thousands of literal nodes
 into every task binary (multi-MB per stage).  In the kernel the centroid
@@ -28,13 +28,25 @@ probes, and the final top-k match the oracle bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.operators.similarity import (
+    CENTROIDS_META_KEY,
+    centroid_fingerprint,
     cosine_pairs_udf,
     deterministic_planes,
+    nearest_cells,
+    rank_topk,
+    vector_kernel_udf,
 )
+
+
+class CellIndexMismatchError(ValueError):
+    """``ivf_topk(corpus_assigned=...)`` got a frame it cannot search: a
+    required column is missing, or its cells were not assigned against the
+    search's centroids (a stale or differently-fitted index would silently
+    return wrong neighbors)."""
 
 
 def fit_ivf_centroids(
@@ -77,45 +89,18 @@ def deterministic_centroids(dim: int, n_cells: int) -> list[list[float]]:
 
 def _cells_udf(centroids: list[list[float]], n_probe: int):
     """Arrow pandas UDF: embedding array → the ``n_probe`` nearest cell ids,
-    nearest first.  Tie-break toward the LARGER cell id, matching the
-    oracle's ascending struct sort read from the top."""
+    nearest first, ties toward the LARGER cell id
+    (similarity.nearest_cells)."""
     cents = [[float(v) for v in c] for c in centroids]
-    n_out = n_probe
 
-    def kernel(s):
+    def cells_kernel(V):
         import numpy as np
         import pandas as pd
 
         C = np.asarray(cents, dtype=np.float64)  # (n_cells, dim)
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
-        d = V[:, None, :] - C[None, :, :]
-        x = d * d  # (n, n_cells, dim) squared-diff products
-        # pairwise balanced-tree fold — the association order of the
-        # oracle's parenthesized sum (catalog_text._balanced_sum_sql)
-        while x.shape[2] > 1:
-            m = x.shape[2] // 2
-            even = x[:, :, 0 : 2 * m : 2] + x[:, :, 1 : 2 * m : 2]
-            x = (
-                even
-                if x.shape[2] % 2 == 0
-                else np.concatenate([even, x[:, :, -1:]], axis=2)
-            )
-        negdist = -x[:, :, 0]  # (n, n_cells)
-        # ascending stable sort on negdist keeps equal entries in cell order,
-        # so reading from the top yields max-negdist, ties → larger cell —
-        # identical to sorting (negdist, cell) structs and reversing
-        order = np.argsort(negdist, axis=1, kind="stable")
-        top = order[:, : -n_out - 1 : -1].astype(np.int32)  # (n, n_probe)
-        return pd.Series(list(top))
+        return pd.Series(list(nearest_cells(V, C, n_probe)))
 
-    # The kernel is pure, but without the flag Catalyst clones it into the
-    # join's pushed-down isnotnull(key) filter and the corpus assignment runs
-    # TWICE (two ArrowEvalPython stages — 2× the dominant narrow pass at
-    # scale).  asNondeterministic forbids duplicating/reordering the call, so
-    # the plan evaluates each side's assignment exactly once.
-    return F.pandas_udf(kernel, "array<int>").asNondeterministic()
+    return vector_kernel_udf(cells_kernel, len(cents[0]), "array<int>")
 
 
 def ivf_topk(
@@ -136,18 +121,22 @@ def ivf_topk(
 
     ``corpus_assigned``: precomputed ``(corpus_id, __cv, __cell)`` rows —
     e.g. a slice of ``similarity.corpus_index_rows`` or a persisted
-    :func:`assign_cells` index — sharing one corpus assignment pass
-    between consumers instead of re-running the cell kernel per search.
-    The assignment MUST come from the same centroids."""
-    probe = _cells_udf(centroids, n_probe)
-    if corpus_assigned is not None:
-        c = corpus_assigned
+    :func:`assign_cells` index with ``cell`` renamed ``__cell`` — sharing
+    one corpus assignment pass between consumers instead of re-running the
+    cell kernel per search.  The assignment must come from the same
+    centroids: a missing column, or a ``__cell`` whose metadata fingerprint
+    (stamped by both assigners) is absent or names other centroids, raises
+    :class:`CellIndexMismatchError`."""
+    if corpus_assigned is None:
+        c = assign_cells(corpus, centroids, corpus_id, vec_col).select(
+            corpus_id,
+            F.col(vec_col).alias("__cv"),
+            F.col("cell").alias("__cell"),
+        )
     else:
-        assign = _cells_udf(centroids, 1)
-        c = corpus.select(
-            F.col(corpus_id),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        ).withColumn("__cell", F.element_at(assign(F.col("__cv")), 1))
+        _check_assigned(corpus_assigned, corpus_id, centroids)
+        c = corpus_assigned
+    probe = _cells_udf(centroids, n_probe)
     q = queries.select(
         F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
     ).withColumn("__cell", F.explode(probe(F.col("__qv"))))
@@ -158,12 +147,28 @@ def ivf_topk(
         corpus_id,
         cosine_pairs_udf()(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, query_id, corpus_id, k)
+
+
+def _check_assigned(
+    corpus_assigned: DataFrame, corpus_id: str, centroids: list[list[float]]
+) -> None:
+    schema = corpus_assigned.schema
+    missing = sorted({corpus_id, "__cv", "__cell"} - set(schema.names))
+    if missing:
+        raise CellIndexMismatchError(
+            f"corpus_assigned lacks column(s) {missing}; it must carry "
+            f"({corpus_id}, __cv, __cell)"
+        )
+    got = schema["__cell"].metadata.get(CENTROIDS_META_KEY)
+    want = centroid_fingerprint(centroids)
+    if got != want:
+        raise CellIndexMismatchError(
+            "corpus_assigned.__cell was assigned against "
+            + (f"centroids {got}" if got else "unknown centroids")
+            + f", not the search's centroids {want}; re-assign it with "
+            "assign_cells or corpus_index_rows"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -184,12 +189,17 @@ def assign_cells(
 ) -> DataFrame:
     """The persisted IVF index frame: ``(id, vec, cell)`` — one narrow pass,
     no shuffle.  Write with ``sinks.write_partitioned(..., buckets=...)`` on
-    ``cell`` so ivf search joins leave the corpus side in place."""
+    ``cell`` so ivf search joins leave the corpus side in place.  ``cell``
+    carries the centroids' fingerprint in its field metadata
+    (``similarity.CENTROIDS_META_KEY``; it survives select, persist and
+    parquet), which :func:`ivf_topk` checks."""
     assign = _cells_udf(centroids, 1)
     return corpus.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias(vec_col),
-    ).withColumn("cell", F.element_at(assign(F.col(vec_col)), 1))
+    ).withColumn("cell", F.element_at(assign(F.col(vec_col)), 1)).withMetadata(
+        "cell", {CENTROIDS_META_KEY: centroid_fingerprint(centroids)}
+    )
 
 
 def ivf_add_batch(

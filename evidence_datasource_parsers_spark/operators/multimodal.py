@@ -853,7 +853,7 @@ def extract_features(
     deterministic, codec-free stand-in with the SAME signature and output
     shape (``array<float>``) as a real CNN/audio embedding kernel.  The
     output feeds the similarity stack directly (brute_force_topk /
-    ann_lsh_topk / ivf_topk on the ``features`` column), so the whole
+    ann_lsh_topk_dual / ivf_topk on the ``features`` column), so the whole
     blob → embed → index → search pipeline is exercisable end-to-end.
 
     One narrow pass, no shuffle; at scale one Python worker per core, Arrow

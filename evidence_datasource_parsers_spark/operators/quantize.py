@@ -12,14 +12,16 @@ component.  The layout is the standard IVF-PQ-adjacent baseline:
 Everything is native Spark HOFs (transform / array_max / aggregate) — a
 narrow per-row projection, no Python, no shuffle, fully column-prunable.
 Downstream search either dequantizes back to arrays (exact same operators:
-brute_force_topk / ann_lsh_topk / ivf_topk) or consumes q directly with an
-int-dot kernel; the recall test pins that top-k survives the round trip.
+brute_force_topk / ann_lsh_topk_dual / ivf_topk) or consumes q directly with
+an int-dot kernel; the recall test pins that top-k survives the round trip.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from evidence_datasource_parsers_spark.operators.similarity import rank_topk
 
 
 def _scale(vec: Column) -> Column:
@@ -72,9 +74,8 @@ def quantized_topk(
     so the kernel runs integer dot products (int32 accumulation; 127²·dim
     stays far under 2³¹ for any realistic dim) and touches 4× fewer bytes
     than the float scorer — the point of quantizing at 100 TB.  Same
-    topology as similarity.brute_force_topk: broadcast probe set, window
-    top-k, ties to the ascending corpus id."""
-    from pyspark.sql import Window
+    topology as similarity.brute_force_topk: broadcast probe set, then the
+    shared top-k tail (similarity.rank_topk)."""
 
     def kernel(qs, cs):
         import numpy as np
@@ -103,12 +104,7 @@ def quantized_topk(
             score(F.col("__qq"), F.col("__qc")).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, query_id, corpus_id, k)
 
 
 def dequantize_embeddings(

@@ -1,15 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
-(random-hyperplane) approximate variant as the scale path.  Bucketing and
-pair scoring run in Arrow-batched numpy kernels whose pairwise folds replay
-the oracle's balanced-tree IEEE arithmetic bit-for-bit (unrolled expression
-trees compile past HotSpot's JIT method ceiling and evaluate interpreted —
-SCALE.md hazards 7–9); the per-query top-k is a window over the similarity.
+(random-hyperplane) approximate variant as the scale path.  Bucketing, cell
+assignment and pair scoring run in Arrow-batched numpy kernels built on ONE
+numpy core (:func:`pairwise_fold`, :func:`pack_sign_buckets`,
+:func:`nearest_cells`) that replays the oracle's balanced-tree IEEE
+arithmetic bit-for-bit (unrolled expression trees compile past HotSpot's JIT
+method ceiling and evaluate interpreted — SCALE.md hazards 7–9); the
+per-query top-k is one window over the similarity (:func:`rank_topk`).
 
 Scale design: brute force is O(|Q|·|C|); keep |Q| bounded (a probe set) or
-use ``ann_lsh_topk`` which shuffles on hyperplane-sign buckets so each query
-only scores its bucket-mates (or IVF cells — operators/ivf.py).
+use ``ann_lsh_topk_dual`` which shuffles on hyperplane-sign buckets so each
+query only scores its bucket-mates (or IVF cells — operators/ivf.py).
 """
 
 from __future__ import annotations
@@ -35,31 +37,6 @@ def balanced_sum(terms: list):
             for i in range(0, len(terms), 2)
         ]
     return terms[0]
-
-
-def sql_tree(terms: list[str]) -> str:
-    """``balanced_sum`` over SQL fragments: the identical pairwise
-    association order, emitted as ONE string.  Building a 64-term tree
-    through the Column API costs a py4j round trip per node (~hundreds per
-    expression — driver-side seconds before the job even starts); one
-    ``F.expr`` call parses the whole tree JVM-side."""
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def dot_sql(a: str, b: str, dim: int) -> str:
-    """Dot-product SQL fragment over two array column NAMES (0-based Spark
-    subscripts; the oracle's 1-based ``qa[i+1]`` twin lives in
-    plans/catalog_text._dot_sql)."""
-    return sql_tree([f"{a}[{i}] * {b}[{i}]" for i in range(dim)])
-
-
-def norm_sql(a: str, dim: int) -> str:
-    return f"sqrt({sql_tree([f'{a}[{i}] * {a}[{i}]' for i in range(dim)])})"
 
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
@@ -153,6 +130,78 @@ def pairwise_fold(x):
     return x[..., 0]
 
 
+def pack_sign_buckets(proj, n_tables: int, n_planes: int) -> list:
+    """``(n, T·J)`` hyperplane projections → T int32 bucket-id arrays:
+    table t packs the signs of planes [t·J, (t+1)·J), plane j as bit j —
+    the oracle's bucket packing."""
+    import numpy as np
+
+    signs = proj > 0
+    out = []
+    for t in range(n_tables):
+        bk = np.zeros(len(proj), dtype=np.int32)
+        for j in range(n_planes):
+            bk |= signs[:, t * n_planes + j].astype(np.int32) << j
+        out.append(bk)
+    return out
+
+
+def nearest_cells(V, centroids, n_out: int):
+    """``(n, dim)`` vectors → ``(n, n_out)`` int32 ids of the nearest
+    centroids, nearest first.  Squared distances fold in the oracle's
+    balanced-tree order; an ascending STABLE sort on the negated distance
+    keeps equal entries in cell order, so reading from the top breaks ties
+    toward the LARGER cell id — identical to the oracle's ascending
+    ``(negdist, cell)`` struct sort read from the top."""
+    import numpy as np
+
+    d = V[:, None, :] - centroids[None, :, :]
+    negdist = -pairwise_fold(d * d)  # (n, n_cells)
+    order = np.argsort(negdist, axis=1, kind="stable")
+    return order[:, : -n_out - 1 : -1].astype(np.int32)
+
+
+def vector_kernel_udf(fn, dim: int, schema: str):
+    """The Arrow UDF around every per-vector kernel: ``fn`` gets each batch
+    as an ``(n, dim)`` float64 matrix (``(0, dim)`` for an empty batch) and
+    returns the pandas column(s) of ``schema``.
+
+    The kernels are pure, but without the nondeterministic flag Catalyst
+    clones a kernel whose output feeds a join key into the join's
+    pushed-down ``isnotnull`` filter, and the corpus pass runs TWICE (two
+    ArrowEvalPython nodes — 2× the dominant narrow pass at scale).
+    ``asNondeterministic`` forbids duplicating or reordering the call, so
+    a frame evaluates each kernel exactly once, persisted or not."""
+
+    def kernel(s):
+        import numpy as np
+
+        return fn(
+            np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in s]
+            ).reshape(len(s), dim)
+        )
+
+    return F.pandas_udf(kernel, schema).asNondeterministic()
+
+
+#: Field-metadata key of an IVF cell column: the fingerprint of the
+#: centroids the cells were assigned against (survives select, persist and
+#: parquet), checked by ``ivf.ivf_topk(corpus_assigned=...)``.
+CENTROIDS_META_KEY = "ivf_centroids"
+
+
+def centroid_fingerprint(centroids: list[list[float]]) -> str:
+    """Stable digest of a centroid matrix (shape and every double)."""
+    import hashlib
+    import struct
+
+    h = hashlib.sha256()
+    for c in centroids:
+        h.update(struct.pack(f"<q{len(c)}d", len(c), *map(float, c)))
+    return h.hexdigest()[:16]
+
+
 def cosine_pairs_udf():
     """Arrow scalar UDF: cosine of two array<double> columns, one batch at a
     time.  This is the scoring hot path for every pair the candidate joins
@@ -177,6 +226,20 @@ def cosine_pairs_udf():
     return F.pandas_udf(kernel, "double")
 
 
+def rank_topk(
+    scored: DataFrame, query_id: str, corpus_id: str, k: int
+) -> DataFrame:
+    """The top-k tail of every exact-score search: per query, cosine
+    descending, ties to the ascending corpus id, ``rank`` = row_number,
+    kept while ``rank <= k``."""
+    w = Window.partitionBy(query_id).orderBy(
+        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -188,12 +251,11 @@ def brute_force_topk(
     """Exact cosine top-k: broadcast the (small) query set against the corpus.
 
     O(|Q|·|C|) by definition — keep |Q| a bounded probe set; the scale paths
-    are ann_lsh_topk and operators/ivf.  Scoring runs in the shared Arrow
-    cosine kernel (cosine_pairs_udf) — bit-identical to the oracle's
+    are ann_lsh_topk_dual and operators/ivf.  Scoring runs in the shared
+    Arrow cosine kernel (cosine_pairs_udf) — bit-identical to the oracle's
     expression tree, but JIT-friendly and free of multi-MB plan literals.
 
-    Output: (query_id, neighbor_id, cosine_sim, rank).  Ties break by
-    neighbor id ascending for determinism.
+    Output: (query_id, neighbor_id, cosine_sim, rank) — :func:`rank_topk`.
     """
     q = queries.select(
         F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
@@ -212,13 +274,7 @@ def brute_force_topk(
             ),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, query_id, corpus_id, k)
 
 
 def deterministic_planes(dim: int, n_planes: int) -> list[list[float]]:
@@ -263,65 +319,66 @@ def hyperplane_bucket_rows(
     pairwise fold that performs the same balanced-tree additions in the
     same order — double ops are deterministic, so the signs (and therefore
     buckets, candidates and downstream results) match the oracle
-    bit-for-bit.
+    bit-for-bit.  It is the :func:`corpus_index_rows` kernel without the
+    cell, exploded by :func:`index_rows_to_bucket_rows`.
 
     Rows with a NULL vector are excluded (they can be neither candidates
     nor stored fingerprints; the numpy kernel has no NULL representation).
     """
-    all_planes = deterministic_planes(dim, n_planes * n_tables)
-    planes_const = [[float(v) for v in p] for p in all_planes]
-    n_t, n_p = n_tables, n_planes
-    schema = ", ".join(f"bk{t} int" for t in range(n_tables))
+    return index_rows_to_bucket_rows(
+        _index_rows(
+            df, id_col, vec_col, dim, n_planes, n_tables, None, vec_alias
+        ),
+        id_col, n_tables, vec_alias,
+    )
 
-    def bucket_kernel(s):
+
+def _index_rows(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    centroids: list[list[float]] | None,
+    vec_alias: str,
+) -> DataFrame:
+    """``(id, vec_alias, __bk0..__bk{T-1}[, __cell])`` from ONE Arrow pass:
+    the table buckets, plus the nearest cell when ``centroids`` is given."""
+    planes = deterministic_planes(dim, n_planes * n_tables)
+    with_cell = centroids is not None
+    cents = [[float(v) for v in c] for c in centroids or []]
+    cols = [f"bk{t} int" for t in range(n_tables)]
+    schema = ", ".join(cols + ["cell int"] if with_cell else cols)
+
+    def index_kernel(V):
         import numpy as np
         import pandas as pd
 
-        P = np.asarray(planes_const, dtype=np.float64)  # (T*J, dim)
-        if len(s) == 0:
-            return pd.DataFrame(
-                {f"bk{t}": pd.array([], dtype="int32") for t in range(n_t)}
-            )
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
-        x = V[:, None, :] * P[None, :, :]  # (n, T*J, dim) products
-        # balanced-tree fold: add adjacent pairs, odd tail carried last —
-        # the exact association order of similarity.balanced_sum / the
-        # oracle's pairwise-parenthesized sum
-        while x.shape[2] > 1:
-            m = x.shape[2] // 2
-            even = x[:, :, 0 : 2 * m : 2] + x[:, :, 1 : 2 * m : 2]
-            x = (
-                even
-                if x.shape[2] % 2 == 0
-                else np.concatenate([even, x[:, :, -1:]], axis=2)
-            )
-        signs = x[:, :, 0] > 0  # (n, T*J)
-        out = {}
-        for t in range(n_t):
-            bk = np.zeros(len(V), dtype=np.int32)
-            for j in range(n_p):
-                bk |= signs[:, t * n_p + j].astype(np.int32) << j
-            out[f"bk{t}"] = bk
+        P = np.asarray(planes, dtype=np.float64)  # (T*J, dim)
+        bks = pack_sign_buckets(
+            pairwise_fold(V[:, None, :] * P[None, :, :]), n_tables, n_planes
+        )
+        out = {f"bk{t}": bk for t, bk in enumerate(bks)}
+        if with_cell:
+            C = np.asarray(cents, dtype=np.float64)  # (n_cells, dim)
+            out["cell"] = nearest_cells(V, C, 1)[:, 0]
         return pd.DataFrame(out)
 
-    bucket_udf = F.pandas_udf(bucket_kernel, schema)
-    src = (
+    idx_udf = vector_kernel_udf(index_kernel, dim, schema)
+    return (
         df.where(F.col(vec_col).isNotNull())
         .select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_alias)
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>").alias(vec_alias),
         )
-        .withColumn("__bks", bucket_udf(F.col(vec_alias)))
-    )
-    # one SQL parse instead of one py4j trip per struct node (r13)
-    buckets = ", ".join(
-        f"struct({t} AS table, __bks.bk{t} AS bucket)"
-        for t in range(n_tables)
-    )
-    return src.selectExpr(
-        qid(id_col), qid(vec_alias), f"explode(array({buckets})) AS __b"
-    ).selectExpr(
-        qid(id_col), qid(vec_alias), "__b.table AS __t",
-        "__b.bucket AS __bucket",
+        .withColumn("__idx", idx_udf(F.col(vec_alias)))
+        .selectExpr(
+            qid(id_col),
+            qid(vec_alias),
+            *[f"__idx.bk{t} AS {qid(f'__bk{t}')}" for t in range(n_tables)],
+            *(["__idx.cell AS __cell"] if with_cell else []),
+        )
     )
 
 
@@ -336,18 +393,21 @@ def corpus_index_rows(
     vec_alias: str = "__cv",
 ) -> DataFrame:
     """Fused per-vector index row: LSH table buckets AND IVF cell from ONE
-    Arrow pass — ``(id, vec_alias, bk0..bk{T-1}, __cell)``, one row per
+    Arrow pass — ``(id, vec_alias, __bk0..__bk{T-1}, __cell)``, one row per
     corpus vector (r14, guide §4.1/§2.1).
 
     A query that searches by BOTH index structures (q39's lsh/lsh_mp + ivf
     legs) otherwise scans the corpus twice and pays two Python boundary
     crossings for kernels that share the expensive part — materializing the
     (n, dim) batch matrix.  The fused kernel computes the hyperplane
-    projections and the centroid distances off the same matrix, replaying
-    each oracle's IEEE arithmetic EXACTLY as the separate kernels do
-    (identical products, identical balanced-tree folds, identical stable
-    argsort tie-break), so buckets and cells are bit-identical to
-    :func:`hyperplane_bucket_rows` / ``ivf._cells_udf``.
+    projections and the centroid distances off the same matrix through the
+    same numpy core as the separate kernels (:func:`pack_sign_buckets`,
+    :func:`nearest_cells`), so buckets and cells are bit-identical to
+    :func:`hyperplane_bucket_rows` / ``ivf.assign_cells``.
+
+    ``__cell`` carries the centroids' fingerprint in its field metadata
+    (:data:`CENTROIDS_META_KEY`), so ``ivf.ivf_topk(corpus_assigned=...)``
+    refuses a slice assigned against other centroids.
 
     Persist (or localCheckpoint) the result when feeding multiple legs —
     the two consumers otherwise each re-run the fused kernel, which is
@@ -356,55 +416,10 @@ def corpus_index_rows(
 
     Rows with a NULL vector are excluded, as in the separate kernels.
     """
-    all_planes = deterministic_planes(dim, n_planes * n_tables)
-    planes_const = [[float(v) for v in p] for p in all_planes]
-    cents_const = [[float(v) for v in c] for c in centroids]
-    n_t, n_p = n_tables, n_planes
-    schema = ", ".join(
-        [f"bk{t} int" for t in range(n_tables)] + ["cell int"]
-    )
-
-    def kernel(s):
-        import numpy as np
-        import pandas as pd
-
-        P = np.asarray(planes_const, dtype=np.float64)  # (T*J, dim)
-        C = np.asarray(cents_const, dtype=np.float64)  # (n_cells, dim)
-        if len(s) == 0:
-            out = {f"bk{t}": pd.array([], dtype="int32") for t in range(n_t)}
-            out["cell"] = pd.array([], dtype="int32")
-            return pd.DataFrame(out)
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
-        # LSH signs — identical fold to hyperplane_bucket_rows
-        signs = pairwise_fold(V[:, None, :] * P[None, :, :]) > 0  # (n, T*J)
-        out = {}
-        for t in range(n_t):
-            bk = np.zeros(len(V), dtype=np.int32)
-            for j in range(n_p):
-                bk |= signs[:, t * n_p + j].astype(np.int32) << j
-            out[f"bk{t}"] = bk
-        # IVF nearest cell — identical fold + stable tie-break to
-        # ivf._cells_udf(centroids, 1)
-        d = V[:, None, :] - C[None, :, :]
-        negdist = -pairwise_fold(d * d)  # (n, n_cells)
-        order = np.argsort(negdist, axis=1, kind="stable")
-        out["cell"] = order[:, -1].astype(np.int32)
-        return pd.DataFrame(out)
-
-    idx_udf = F.pandas_udf(kernel, schema)
-    return (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_alias),
-        )
-        .withColumn("__idx", idx_udf(F.col(vec_alias)))
-        .selectExpr(
-            qid(id_col),
-            qid(vec_alias),
-            *[f"__idx.bk{t} AS {qid(f'__bk{t}')}" for t in range(n_tables)],
-            "__idx.cell AS __cell",
-        )
+    return _index_rows(
+        corpus, id_col, vec_col, dim, n_planes, n_tables, centroids, vec_alias
+    ).withMetadata(
+        "__cell", {CENTROIDS_META_KEY: centroid_fingerprint(centroids)}
     )
 
 
@@ -426,81 +441,6 @@ def index_rows_to_bucket_rows(
     )
 
 
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    query_id: str = "query_id",
-    corpus_id: str = "neighbor_id",
-    vec_col: str = "embedding",
-    multiprobe: int = 0,
-    corpus_bucket_rows: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k: score only pairs sharing a hyperplane-sign bucket in
-    at least one of ``n_tables`` independent hash tables (OR-amplification).
-
-    ``corpus_bucket_rows``: precomputed :func:`hyperplane_bucket_rows` for
-    the corpus (vec_alias '__cv', same plane geometry) — share ONE corpus
-    bucketing pass between searches (e.g. base and multi-probe variants, or
-    repeated query batches against a persisted index).
-
-    Recall ≈ 1-(1-p^n_planes)^n_tables where p = 1-θ/π per plane; tune
-    n_planes down / n_tables up for higher recall at more compute.  One
-    shuffle on (table, bucket) — corpus rows replicate ×n_tables, candidates
-    dedupe before scoring so each pair is scored once.
-
-    ``multiprobe > 0`` additionally probes, per table, the buckets reached
-    by flipping the sign of that many smallest-margin planes
-    (:func:`hyperplane_probe_rows`) — more recall at query-side cost only;
-    the corpus replication and store layout are unchanged.
-    """
-    q = (
-        hyperplane_probe_rows(
-            queries, query_id, vec_col, dim, n_planes, n_tables,
-            multiprobe, "__qv",
-        )
-        if multiprobe
-        else hyperplane_bucket_rows(
-            queries, query_id, vec_col, dim, n_planes, n_tables, "__qv"
-        )
-    )
-    c = (
-        corpus_bucket_rows
-        if corpus_bucket_rows is not None
-        else hyperplane_bucket_rows(
-            corpus, corpus_id, vec_col, dim, n_planes, n_tables, "__cv"
-        )
-    )
-    candidates = (
-        c.join(q.select(query_id, "__t", "__bucket"), on=["__t", "__bucket"])
-        .where(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, "__cv")
-        .distinct()
-    )
-    # scoring runs in the shared Arrow cosine kernel — same balanced-tree
-    # IEEE arithmetic as the oracle, JIT-friendly (SCALE.md hazard 7)
-    scored = candidates.join(
-        F.broadcast(queries.select(
-            F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
-        )),
-        on=query_id,
-    ).select(
-        query_id,
-        corpus_id,
-        cosine_pairs_udf()(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
 def ann_lsh_topk_dual(
     queries: DataFrame,
     corpus: DataFrame,
@@ -516,39 +456,49 @@ def ann_lsh_topk_dual(
     base_method: str = "lsh",
     mp_method: str = "lsh_mp",
 ) -> DataFrame:
-    """Base AND multi-probe top-k from ONE candidate + scoring pass (r13).
+    """LSH approximate top-k — base AND multi-probe legs from ONE candidate
+    + scoring pass: score only pairs sharing a hyperplane-sign bucket in at
+    least one of ``n_tables`` independent hash tables (OR-amplification).
 
-    Running :func:`ann_lsh_topk` twice (base, then ``multiprobe=m``)
-    duplicates the whole pipeline — two candidate joins, two dedups, two
-    Arrow scoring passes, two window sorts — even though the base
-    candidate set is a SUBSET of the multi-probe one (probe position 0 in
-    every table is the unflipped bucket).  This variant:
+    Recall ≈ 1-(1-p^n_planes)^n_tables where p = 1-θ/π per plane; tune
+    n_planes down / n_tables up for higher recall at more compute.  One
+    shuffle on (table, bucket) — corpus rows replicate ×n_tables, candidates
+    dedupe before scoring so each pair is scored once.  The multi-probe leg
+    additionally probes, per table, the buckets reached by flipping the
+    sign of the ``multiprobe`` smallest-margin planes
+    (:func:`hyperplane_probe_rows`) — more recall at query-side cost only;
+    the corpus replication and store layout are unchanged.
 
-      1. generates probe rows once with the base flag
-         (``hyperplane_probe_rows(..., with_base_flag=True)``);
-      2. dedups candidates grouped on (query, neighbor, vec) — the same
-         grouping the old ``distinct()`` used — keeping
+    ``corpus_bucket_rows``: precomputed :func:`hyperplane_bucket_rows` (or
+    :func:`index_rows_to_bucket_rows`) for the corpus (vec_alias '__cv',
+    same plane geometry) — share ONE corpus bucketing pass between searches.
+
+    The base candidate set is a SUBSET of the multi-probe one (probe
+    position 0 in every table is the unflipped bucket), so one pass serves
+    both legs:
+
+      1. generates probe rows once; ``__is_base`` marks position 0;
+      2. dedups candidates grouped on (query, neighbor, vec), keeping
          ``max(__is_base)``, i.e. "pair shares at least one BASE bucket";
-      3. scores each pair exactly once in the shared Arrow cosine kernel
-         (bit-identical values, so both legs see the scores the separate
-         passes computed);
+      3. scores each pair exactly once in the shared Arrow cosine kernel;
       4. ranks both legs in ONE window pass over one exchange:
          ``row_number`` is the multi-probe rank, and a running
          ``sum(CASE WHEN __in_base ...)`` over the same total order is
-         the rank among base candidates (equal to the separate base
-         leg's row_number by construction — the order restricted to
-         base rows is the base leg's order);
+         the rank among base candidates (equal to a base-only search's
+         row_number by construction — the order restricted to base rows
+         is the base search's order);
       5. explodes each row into the legs it qualifies for, tagged
          ``base_method`` / ``mp_method``.
 
     Output: (method, query_id, corpus_id, cosine_sim, rank) — the exact
-    row multiset of the two separate calls, at one candidate join, one
-    dedup aggregate, one Python-boundary crossing and one shuffle fewer.
-    Equivalence is pinned by test_ann_lsh_topk_dual_matches_separate_legs.
+    row multiset of two separate base-only and multi-probe searches, at one
+    candidate join, one dedup aggregate, one Python-boundary crossing and
+    one shuffle fewer.  Ties break by corpus id ascending.  Equivalence is
+    pinned by test_ann_lsh_topk_dual_matches_separate_legs.
     """
     q = hyperplane_probe_rows(
         queries, query_id, vec_col, dim, n_planes, n_tables,
-        multiprobe, "__qv", with_base_flag=True,
+        multiprobe, "__qv",
     )
     c = (
         corpus_bucket_rows
@@ -744,7 +694,7 @@ def blocked_cosine_pairs(
 # lexical near-dup → incremental_lsh_dedupe /
 # incremental_simhash_dedupe_indexed, semantic near-dup → here).  The state carried between runs is the retained
 # corpus's embedding column itself; candidates come from the same
-# multi-table hyperplane buckets as ann_lsh_topk, verification is exact
+# multi-table hyperplane buckets as ann_lsh_topk_dual, verification is exact
 # cosine.
 # ---------------------------------------------------------------------------
 
@@ -789,7 +739,7 @@ def incremental_embedding_dedupe(
     score NaN cosine and also never match.
 
     Within-batch near-dups are out of scope by design (run
-    ``blocked_cosine_pairs``/``ann_lsh_topk`` at rest over the batch).
+    ``blocked_cosine_pairs``/``ann_lsh_topk_dual`` at rest over the batch).
 
     Scale shape: the batch is bucketed once (Arrow numpy kernel, persisted);
     the store side is bucketed at join time OR supplied precomputed via
@@ -831,7 +781,7 @@ def incremental_embedding_dedupe(
         .join(store_bk.select("__sv", "__t", "__bucket"), on=["__t", "__bucket"])
         .select(id_col, "__nv", "__sv")
         # one score per (batch doc, store doc) pair even when they collide
-        # in several tables — dedup BEFORE the kernel, same as ann_lsh_topk
+        # in several tables — dedup BEFORE the kernel, same as ann_lsh_topk_dual
         .distinct()
     )
     score = cosine_pairs_udf()(F.col("__nv"), F.col("__sv"))
@@ -862,7 +812,6 @@ def hyperplane_probe_rows(
     n_tables: int = 4,
     multiprobe: int = 0,
     vec_alias: str = "__v",
-    with_base_flag: bool = False,
 ) -> DataFrame:
     """Query-side bucket rows WITH multi-probe: besides its own bucket in
     each table, a query also probes the buckets reached by flipping the
@@ -874,83 +823,53 @@ def hyperplane_probe_rows(
     untouched — the cheap recall knob when adding hash tables (which
     re-replicates the corpus) is too expensive.
 
-    ``multiprobe=0`` emits exactly :func:`hyperplane_bucket_rows`'s rows.
+    Output ``(id, vec_alias, __t, __bucket, __is_base)``: ``__is_base``
+    marks the unflipped bucket (position 0 of each table's probe list) —
+    the flag that lets one candidate pass serve both the base and the
+    multi-probe leg (:func:`ann_lsh_topk_dual`).  ``multiprobe=0`` emits
+    exactly :func:`hyperplane_bucket_rows`'s rows, every one flagged base.
     """
     if multiprobe < 0 or multiprobe > n_planes:
         raise ValueError(f"multiprobe must be in [0, {n_planes}]")
-    all_planes = deterministic_planes(dim, n_planes * n_tables)
-    planes_const = [[float(v) for v in p] for p in all_planes]
-    n_t, n_p, n_probe = n_tables, n_planes, multiprobe
+    planes = deterministic_planes(dim, n_planes * n_tables)
 
-    def kernel(s):
+    def probe_kernel(V):
         import numpy as np
         import pandas as pd
 
-        P = np.asarray(planes_const, dtype=np.float64)
-        if len(s) == 0:
-            return pd.DataFrame(
-                {f"bk{t}": pd.Series([], dtype=object) for t in range(n_t)}
-            )
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
-        x = V[:, None, :] * P[None, :, :]
-        while x.shape[2] > 1:
-            m = x.shape[2] // 2
-            even = x[:, :, 0 : 2 * m : 2] + x[:, :, 1 : 2 * m : 2]
-            x = (
-                even
-                if x.shape[2] % 2 == 0
-                else np.concatenate([even, x[:, :, -1:]], axis=2)
-            )
-        proj = x[:, :, 0]  # (n, T*J) — same fold as the base bucketing
-        signs = proj > 0
+        P = np.asarray(planes, dtype=np.float64)  # (T*J, dim)
+        proj = pairwise_fold(V[:, None, :] * P[None, :, :])  # (n, T*J)
         out = {}
-        for t in range(n_t):
-            sl = slice(t * n_p, (t + 1) * n_p)
-            base = np.zeros(len(V), dtype=np.int32)
-            for j in range(n_p):
-                base |= signs[:, t * n_p + j].astype(np.int32) << j
-            margins = np.abs(proj[:, sl])  # (n, J)
-            flip_order = np.argsort(margins, axis=1, kind="stable")
-            rows = []
-            for i in range(len(V)):
-                bks = [int(base[i])]
-                for m in range(n_probe):
-                    bks.append(int(base[i]) ^ (1 << int(flip_order[i, m])))
-                rows.append(bks)
-            out[f"bk{t}"] = pd.Series(rows)
+        for t, base in enumerate(pack_sign_buckets(proj, n_tables, n_planes)):
+            margins = np.abs(proj[:, t * n_planes : (t + 1) * n_planes])
+            flips = np.argsort(margins, axis=1, kind="stable")[:, :multiprobe]
+            probes = np.concatenate(
+                [base[:, None], base[:, None] ^ (1 << flips)], axis=1
+            ).astype(np.int32)  # (n, 1 + multiprobe), base bucket first
+            out[f"bk{t}"] = pd.Series(list(probes))
         return pd.DataFrame(out)
 
     schema = ", ".join(f"bk{t} array<int>" for t in range(n_tables))
-    bucket_udf = F.pandas_udf(kernel, schema)
+    probe_udf = vector_kernel_udf(probe_kernel, dim, schema)
     src = (
         df.where(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_alias)
         )
-        .withColumn("__bks", bucket_udf(F.col(vec_alias)))
+        .withColumn("__bks", probe_udf(F.col(vec_alias)))
     )
     # one SQL parse instead of one py4j trip per struct node (r13)
     per_table = "array(" + ", ".join(
         f"struct({t} AS table, __bks.bk{t} AS bks)" for t in range(n_tables)
     ) + ")"
     iq, vq = qid(id_col), qid(vec_alias)
-    if with_base_flag:
-        # posexplode: position 0 in each table's probe list IS the
-        # unflipped (base) bucket — the flag that lets one candidate pass
-        # serve both the base and the multi-probe leg (ann_lsh_topk_dual)
-        return (
-            src.selectExpr(iq, vq, f"explode({per_table}) AS __tb")
-            .selectExpr(
-                iq,
-                vq,
-                "__tb.table AS __t",
-                "posexplode(__tb.bks) AS (__pos, __bucket)",
-            )
-            .selectExpr(iq, vq, "__t", "__bucket", "(__pos = 0) AS __is_base")
-        )
     return (
         src.selectExpr(iq, vq, f"explode({per_table}) AS __tb")
         .selectExpr(
-            iq, vq, "__tb.table AS __t", "explode(__tb.bks) AS __bucket"
+            iq,
+            vq,
+            "__tb.table AS __t",
+            "posexplode(__tb.bks) AS (__pos, __bucket)",
         )
+        .selectExpr(iq, vq, "__t", "__bucket", "(__pos = 0) AS __is_base")
     )

@@ -13,7 +13,7 @@ from evidence_datasource_parsers_spark.operators.dedupe import (
     simhash,
 )
 from evidence_datasource_parsers_spark.operators.similarity import (
-    ann_lsh_topk,
+    ann_lsh_topk_dual,
     brute_force_topk,
 )
 
@@ -127,7 +127,9 @@ def test_ann_recall_vs_bruteforce(spark, sf_dir):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_lsh_topk(q, c, dim=64, k=5, n_planes=2).collect()
+        for r in ann_lsh_topk_dual(q, c, dim=64, k=5, n_planes=2)
+        .where(F.col("method") == "lsh")
+        .collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"ANN recall too low: {recall}"
@@ -1017,7 +1019,7 @@ def test_multiprobe_lsh_recall_dominates_base(spark, sf_dir):
     so recall vs brute force can only improve; probe rows carry exactly
     1 + multiprobe buckets per (vector, table)."""
     from evidence_datasource_parsers_spark.operators.similarity import (
-        ann_lsh_topk,
+        ann_lsh_topk_dual,
         brute_force_topk,
         hyperplane_bucket_rows,
         hyperplane_probe_rows,
@@ -1053,17 +1055,15 @@ def test_multiprobe_lsh_recall_dominates_base(spark, sf_dir):
         for r in brute_force_topk(queries, corpus, k=5).collect()
     }
 
-    def recall(mp):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ann_lsh_topk(
-                queries, corpus, dim, k=5, n_planes=4, n_tables=2,
-                multiprobe=mp,
-            ).collect()
-        }
+    legs = ann_lsh_topk_dual(
+        queries, corpus, dim, k=5, n_planes=4, n_tables=2, multiprobe=2
+    ).collect()
+
+    def recall(method):
+        got = {(r.query_id, r.neighbor_id) for r in legs if r.method == method}
         return len(got & truth) / len(truth)
 
-    r0, r2 = recall(0), recall(2)
+    r0, r2 = recall("lsh"), recall("lsh_mp")
     assert r2 >= r0  # probe candidates are a superset — recall is monotone
     assert r2 >= 0.5  # measured 0.72 vs 0.24 base on the synthetic corpus
     import pytest as _pytest
@@ -1382,15 +1382,11 @@ def test_sql_string_builders_plan_equal_column_forms(spark):
     """The r13 SQL-string expression builders (one py4j round trip per
     select) must generate the SAME optimized logical plan as the Column-API
     forms they replaced — identical plans cannot produce different values.
-    Covers minhash_signatures_exploded's staging/agg chain (via the
-    equivalent Column reconstruction), minhash_bands_sql, and
-    estimated_jaccard's column-name fast path."""
+    Covers estimated_jaccard's column-name fast path."""
     import re
 
     from evidence_datasource_parsers_spark.operators.dedupe import (
         estimated_jaccard,
-        minhash_bands,
-        minhash_bands_sql,
     )
 
     canon = lambda s: re.sub(r"#\d+", "#", s)  # noqa: E731
@@ -1407,21 +1403,76 @@ def test_sql_string_builders_plan_equal_column_forms(spark):
         sigs.select(estimated_jaccard(F.col("a"), F.col("b"), 4).alias("j"))
     )
 
-    banded_sql = sigs.selectExpr(f"{minhash_bands_sql('a', 4, 2)} AS bands")
-    banded_col = sigs.select(minhash_bands(F.col("a"), 4, 2).alias("bands"))
-    assert opt(banded_sql) == opt(banded_col)
-    assert banded_sql.collect() == banded_col.collect()
-
 
 def test_ann_lsh_topk_dual_matches_separate_legs(spark, sf_dir):
     """ann_lsh_topk_dual (one candidate + scoring pass + one window for
     both legs, r13) must emit the EXACT row multiset of the two separate
-    ann_lsh_topk calls it replaced in q39."""
+    single-leg searches it replaced in q39.  The single-leg operator is
+    gone from the library; the reconstruction below is its code,
+    verbatim, as the reference."""
+    from pyspark.sql import DataFrame, Window
+
     from evidence_datasource_parsers_spark.operators.similarity import (
-        ann_lsh_topk,
         ann_lsh_topk_dual,
+        cosine_pairs_udf,
+        hyperplane_bucket_rows,
+        hyperplane_probe_rows,
     )
     from evidence_datasource_parsers_spark.plans.catalog import load
+
+    def ann_lsh_topk(
+        queries: DataFrame,
+        corpus: DataFrame,
+        dim: int,
+        k: int = 5,
+        n_planes: int = 8,
+        n_tables: int = 4,
+        query_id: str = "query_id",
+        corpus_id: str = "neighbor_id",
+        vec_col: str = "embedding",
+        multiprobe: int = 0,
+        corpus_bucket_rows: DataFrame | None = None,
+    ) -> DataFrame:
+        q = (
+            hyperplane_probe_rows(
+                queries, query_id, vec_col, dim, n_planes, n_tables,
+                multiprobe, "__qv",
+            )
+            if multiprobe
+            else hyperplane_bucket_rows(
+                queries, query_id, vec_col, dim, n_planes, n_tables, "__qv"
+            )
+        )
+        c = (
+            corpus_bucket_rows
+            if corpus_bucket_rows is not None
+            else hyperplane_bucket_rows(
+                corpus, corpus_id, vec_col, dim, n_planes, n_tables, "__cv"
+            )
+        )
+        candidates = (
+            c.join(q.select(query_id, "__t", "__bucket"), on=["__t", "__bucket"])
+            .where(F.col(query_id) != F.col(corpus_id))
+            .select(query_id, corpus_id, "__cv")
+            .distinct()
+        )
+        scored = candidates.join(
+            F.broadcast(queries.select(
+                F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
+            )),
+            on=query_id,
+        ).select(
+            query_id,
+            corpus_id,
+            cosine_pairs_udf()(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
+        )
+        w = Window.partitionBy(query_id).orderBy(
+            F.col("cosine_sim").desc(), F.col(corpus_id).asc()
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+        )
 
     e = load(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 5).select(
@@ -1518,3 +1569,108 @@ def test_corpus_index_rows_matches_separate_kernels(spark):
         ).collect()
     )
     assert got_cells == want_cells and got_cells
+
+
+def _ivf_fixture(spark, dim=8, n=40):
+    vecs = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[F.sin(F.col("id") * (i + 1) + 0.5) for i in range(dim)]
+        ).alias("embedding"),
+    )
+    q = vecs.where(F.col("vec_id") < 3).withColumnRenamed("vec_id", "query_id")
+    c = vecs.withColumnRenamed("vec_id", "neighbor_id")
+    return q, c
+
+
+def test_corpus_index_rows_unpersisted_feeds_ivf_once(spark):
+    """An un-persisted fused corpus index feeding ivf_topk plans 3 Arrow
+    stages (corpus index, query probe, scoring): the fused kernel must not
+    be cloned into the join's pushed-down isnotnull(__cell) filter, which
+    would run the corpus pass twice.  Values equal the inline path."""
+    import os
+    import sys
+
+    from evidence_datasource_parsers_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
+    from evidence_datasource_parsers_spark.operators.similarity import (
+        corpus_index_rows,
+    )
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
+    from tools.plan_audit import cloned_kernels
+
+    q, c = _ivf_fixture(spark)
+    cents = deterministic_centroids(8, 4)
+    idx = corpus_index_rows(c, "neighbor_id", "embedding", 8, 4, 2, cents)
+    got = ivf_topk(
+        q, c, cents, k=3,
+        corpus_assigned=idx.select("neighbor_id", "__cv", "__cell"),
+    )
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 3, plan
+    assert cloned_kernels(plan) == []
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, ivf_topk(q, c, cents, k=3).collect())
+    )
+
+
+def test_ivf_topk_corpus_assigned_contract(spark, tmp_path):
+    """ivf_topk(corpus_assigned=...) searches only a frame assigned against
+    its own centroids: both assigners stamp the centroid fingerprint into
+    the cell column's metadata, which survives select, persist and parquet;
+    a missing column, a foreign fingerprint or none at all raise
+    CellIndexMismatchError.  The consistent slices (q39's corpus_index_rows
+    slice, a renamed assign_cells index) search like the inline path."""
+    import pytest
+
+    from evidence_datasource_parsers_spark.operators.ivf import (
+        CellIndexMismatchError,
+        assign_cells,
+        deterministic_centroids,
+        ivf_topk,
+    )
+    from evidence_datasource_parsers_spark.operators.similarity import (
+        corpus_index_rows,
+    )
+
+    q, c = _ivf_fixture(spark)
+    cents = deterministic_centroids(8, 4)
+    want = sorted(map(tuple, ivf_topk(q, c, cents, k=3).collect()))
+
+    def search(assigned, centroids=cents):
+        return sorted(map(tuple, ivf_topk(
+            q, c, centroids, k=3, corpus_assigned=assigned
+        ).collect()))
+
+    idx = corpus_index_rows(
+        c, "neighbor_id", "embedding", 8, 4, 2, cents
+    ).persist()
+    try:
+        sliced = idx.select("neighbor_id", "__cv", "__cell")
+        assert search(sliced) == want
+        sliced.write.parquet(str(tmp_path / "idx"))
+        assert search(spark.read.parquet(str(tmp_path / "idx"))) == want
+        ac = assign_cells(c, cents, "neighbor_id", "embedding").select(
+            "neighbor_id",
+            F.col("embedding").alias("__cv"),
+            F.col("cell").alias("__cell"),
+        )
+        assert search(ac) == want
+
+        with pytest.raises(CellIndexMismatchError, match="__cell"):
+            search(idx.select("neighbor_id", "__cv"))
+        with pytest.raises(CellIndexMismatchError, match="__cv"):
+            search(idx.select("neighbor_id", "__cell"))
+        other = deterministic_centroids(8, 5)
+        with pytest.raises(CellIndexMismatchError, match="not the search"):
+            search(sliced, other)
+        unstamped = idx.select(
+            "neighbor_id", "__cv", (F.col("__cell") + 0).alias("__cell")
+        )
+        with pytest.raises(CellIndexMismatchError, match="unknown centroids"):
+            search(unstamped)
+    finally:
+        idx.unpersist()

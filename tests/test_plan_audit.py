@@ -182,3 +182,26 @@ def test_catalog_sweep_no_red_flags(spark, sf_dir):
         if flags and name not in ALLOW:
             flagged[name] = flags
     assert flagged == {}
+
+
+def test_cloned_kernel_flags(spark):
+    """A Python kernel that Catalyst copies into a pushed-down join-key
+    filter is evaluated by two ArrowEvalPython nodes — its input pass runs
+    twice — and must flag; the nondeterministic form of the same kernel,
+    and a persisted kernel frame read twice, must not."""
+    plus = F.pandas_udf(lambda s: s + 1, "long")
+
+    def joined(udf):
+        a = spark.range(10).select("id", udf("id").alias("k"))
+        return a.join(spark.range(10).withColumnRenamed("id", "k2"),
+                      F.col("k") == F.col("k2"))
+
+    assert any("cloned Python kernel" in f
+               for f in audit_plan(_plan(joined(plus))))
+    assert audit_plan(_plan(joined(plus.asNondeterministic()))) == []
+    cached = spark.range(10).select(plus("id").alias("v")).persist()
+    try:
+        twice = cached.unionByName(cached.select((F.col("v") * 2).alias("v")))
+        assert audit_plan(_plan(twice)) == []
+    finally:
+        cached.unpersist()

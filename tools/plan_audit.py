@@ -17,6 +17,10 @@ shapes that wouldn't:
     Defined`); a GlobalLimit beneath it (rank-the-top-N, profiling.py's
     shape) is bounded and passes.  The distributed alternative is
     operators/windows.global_rank.
+  * a cloned Python kernel — one UDF call (``kernel(...)#id``) evaluated
+    by two ArrowEvalPython nodes, e.g. copied into a pushed-down join-key
+    filter: its whole input pass runs twice.  A persisted frame's cached
+    plan, re-printed once per InMemoryTableScan reference, counts once.
 
 Usage:  python tools/plan_audit.py [sf_dir] [query ...]
 Exit code 1 if any query flags.  Run it after adding a query — it is the
@@ -117,6 +121,50 @@ def unpartitioned_windows(optimized: str) -> list[str]:
     return flags
 
 
+def _udf_calls(udfs: str) -> list[str]:
+    """``name#id`` of each top-level call in an ArrowEvalPython UDF list
+    such as ``kernel(a#1, f(b#2))#7, kernel(c#3)#9``."""
+    calls, depth, start = [], 0, 0
+    for j, ch in enumerate(udfs + ","):
+        depth += (ch == "(") - (ch == ")")
+        if ch == "," and depth == 0:
+            calls.append(re.sub(r"\(.*\)", "", udfs[start:j].strip()))
+            start = j + 1
+    return calls
+
+
+def cloned_kernels(plan: str) -> list[str]:
+    """Flag Python UDF calls that one physical plan evaluates in more than
+    one ArrowEvalPython node.  Each distinct cached subtree (the plan under
+    an ``InMemoryRelation``, printed again per reference) is read once."""
+    counts: dict[str, int] = {}
+    cached: set[str] = set()
+    lines = plan.splitlines()
+    i = 0
+    while i < len(lines):
+        line = lines[i]
+        if "InMemoryRelation" in line:
+            depth = _node_indent(line)
+            end = i + 1
+            while end < len(lines) and _node_indent(lines[end]) > depth:
+                end += 1
+            block = "\n".join(ln[depth:] for ln in lines[i + 1 : end])
+            if block in cached:
+                i = end
+                continue
+            cached.add(block)
+        m = re.search(r"ArrowEvalPython \[(.*?)\], \[", line)
+        if m:
+            for call in _udf_calls(m.group(1)):
+                counts[call] = counts.get(call, 0) + 1
+        i += 1
+    return [
+        f"cloned Python kernel {call} evaluated in {n} ArrowEvalPython nodes"
+        for call, n in sorted(counts.items())
+        if n > 1
+    ]
+
+
 def audit_plan(plan: str, optimized: str = "") -> list[str]:
     flags: list[str] = []
     if "CartesianProduct" in plan:
@@ -145,6 +193,7 @@ def audit_plan(plan: str, optimized: str = "") -> list[str]:
     ):
         flags.append("global Sort without top-k")
     flags.extend(unpartitioned_windows(optimized))
+    flags.extend(cloned_kernels(plan))
     return flags
 
 
@@ -299,6 +348,25 @@ def pipeline_plans(spark) -> dict:
     )
     plans["incremental_embedding_fresh"] = eres.fresh
     eres.pinned.unpersist()
+
+    # the fused corpus index feeding the IVF leg WITHOUT a persist: the
+    # kernel must not be cloned into the join's isnotnull(__cell) filter
+    from evidence_datasource_parsers_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
+    from evidence_datasource_parsers_spark.operators.similarity import (
+        corpus_index_rows,
+    )
+
+    cents = deterministic_centroids(8, 4)
+    corpus = vstore.withColumnRenamed("vec_id", "neighbor_id")
+    plans["ivf_corpus_index_unpersisted"] = ivf_topk(
+        vecs.withColumnRenamed("vec_id", "query_id"), corpus, cents, k=3,
+        corpus_assigned=corpus_index_rows(
+            corpus, "neighbor_id", "embedding", 8, 4, 2, cents
+        ).select("neighbor_id", "__cv", "__cell"),
+    )
 
     langs = spark.createDataFrame(
         [("aa", "shared token stream alpha beta gamma"),
